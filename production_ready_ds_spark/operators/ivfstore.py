@@ -10,12 +10,9 @@ search O(probed lists). The 100 TB contract per operation:
   batch is assigned to its nearest list by a broadcast map pass —
   no re-clustering, no shuffle of the corpus (re-training is an
   explicit rebuild, exactly like re-sharding a table).
-- **append is O(batch)**: assignment + one range-clustered segment
-  write on ``list_id`` (layout.write_range_clustered), so every file
-  and row group owns a slice of the list domain. Manifest replaced
-  only after the segment data is durable (the sigstore crash
-  ordering: an unregistered directory is invisible; a dangling
-  manifest entry is impossible).
+- **append is O(batch)**: assignment + one segment clustered on
+  ``list_id``, so every file and row group owns a slice of the list
+  domain.
 - **search is O(probed lists)**: a probe ranks the k centroids with
   the same batched matmul kernel assign uses (zero shuffles; the old
   per-(probe, centroid) JVM fold went super-linear once the
@@ -25,10 +22,9 @@ search O(probed lists). The 100 TB contract per operation:
   read, not a table scan. The IN-pushdown threshold is raised past
   the probe-list count (Spark otherwise degrades In to a useless
   [min, max] range on list ids).
-- **single-writer contract**: same as sigstore/layout — appends and
-  compaction run from one scheduler slot; readers racing a compaction
-  swap can see the store mid-rewrite.
 
+The segment lifecycle (format, crash ordering, folding, deletion, the
+single-writer contract) is described once, in :mod:`.segments`.
 Centroids are stored as JSON (k × dim doubles — kilobytes) so a
 foreign session can open the store without the ML model directory.
 """
@@ -36,13 +32,12 @@ foreign session can open the store without the ML model directory.
 from __future__ import annotations
 
 import json
-import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MANIFEST = "_ivf_manifest.json"
+from .segments import SegmentStore, overlapping, write_json_atomic
+
 CENTROIDS = "_ivf_centroids.json"
 PQ_FILE = "_ivf_pq.json"
 
@@ -127,48 +122,17 @@ def _hash_sample_at_least(
         want = min(n_rows, want * 2)
 
 
-class IVFStore:
+class IVFStore(SegmentStore):
     """Persistent trained-quantizer vector index (see module docstring)."""
 
-    def __init__(self, root: str) -> None:
-        self.root = root
-
-    # -- manifest / centroids -----------------------------------------
-    def _path(self, name: str) -> str:
-        return os.path.join(self.root, name)
-
-    def segments(self) -> list[dict]:
-        try:
-            with open(self._path(MANIFEST)) as fh:
-                return json.load(fh)["segments"]
-        except FileNotFoundError:
-            return []
+    MANIFEST = "_ivf_manifest.json"
+    CLUSTER_BY = ["list_id"]
+    ID_COL = "vec_id"
 
     def attr_names(self) -> list[str]:
         """Metadata columns persisted in every segment (the attrs
         sidecar — empty for a plain vector store)."""
-        try:
-            with open(self._path(MANIFEST)) as fh:
-                return json.load(fh).get("attrs", [])
-        except FileNotFoundError:
-            return []
-
-    def _write_json(self, name: str, payload: dict) -> None:
-        os.makedirs(self.root, exist_ok=True)
-        tmp = self._path(name) + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(payload, fh)
-        os.replace(tmp, self._path(name))
-
-    def _write_manifest(self, segments: list[dict], attrs: list[str] | None = None) -> None:
-        """Replace the segment list, PRESERVING the attrs declaration —
-        every manifest writer (append / delete / compact) goes through
-        here so a rewrite can never silently drop the sidecar schema."""
-        payload: dict = {"segments": segments}
-        names = self.attr_names() if attrs is None else list(attrs)
-        if names:
-            payload["attrs"] = names
-        self._write_json(MANIFEST, payload)
+        return self.load().meta.get("attrs", [])
 
     def centroids(self) -> list[list[float]] | None:
         try:
@@ -256,8 +220,8 @@ class IVFStore:
         # knob: every downstream contract (read_lists pruning, the
         # recall oracles' k check, mean-list width) keys off
         # len(centroids()).
-        self._write_json(
-            CENTROIDS,
+        write_json_atomic(
+            self._path(CENTROIDS),
             {"centroids": [[float(x) for x in c] for c in cents]},
         )
         return len(cents)
@@ -533,10 +497,9 @@ class IVFStore:
         append after the first must ship the same attr column set (the
         manifest records it; a union of mismatched segment schemas
         would poison later reads)."""
-        segments = self.segments()
-        if skip_if_range_indexed and any(
-            s["id_min"] <= id_max and s["id_max"] >= id_min for s in segments
-        ):
+        man = self.load()
+        segments = man.segments
+        if skip_if_range_indexed and overlapping(segments, id_min, id_max):
             return False
         attr_cols = [] if attrs is None else [c for c in attrs.columns if c != id_col]
         reserved = {id_col, vec_col, "list_id", "codes"}
@@ -547,7 +510,7 @@ class IVFStore:
             # dies on (ambiguous reference) — the deferred-poisoning class
             # the empty-batch guard below exists for, applied to names
             raise ValueError(f"attrs columns {clash} collide with segment columns")
-        declared = self.attr_names()
+        declared = man.meta.get("attrs", [])
         if segments and sorted(attr_cols) != sorted(declared):
             raise ValueError(
                 f"attrs columns {sorted(attr_cols)} must match the store's "
@@ -603,7 +566,7 @@ class IVFStore:
                 f"declared segment range [{id_min}, {id_max}]"
             )
         seg = {
-            "seg": max((s["seg"] for s in segments), default=-1) + 1,
+            "seg": self._new_seg(segments),
             "id_min": id_min,
             "id_max": id_max,
             # exact, already paid for by the bounds aggregate above —
@@ -614,81 +577,13 @@ class IVFStore:
             assigned = assigned.join(
                 attrs.select(id_col, *attr_cols), id_col, "left"
             )
-        from .layout import write_range_clustered
-
-        write_range_clustered(
-            assigned, self._path(f"seg={seg['seg']}"), ["list_id"], n_files=n_files
-        )
-        self._write_manifest([*segments, seg], attrs=attr_cols)
+        self._write(assigned, seg, n_files)
+        meta = {k: v for k, v in man.meta.items() if k != "attrs"}
+        if attr_cols:
+            meta["attrs"] = attr_cols
+        self._commit([*segments, seg], meta)
         return True
 
-    def delete_ids(
-        self, spark: SparkSession, ids: list[int], *, n_files: int = 4
-    ) -> int:
-        """Right-to-be-forgotten: remove the given vector ids from the
-        index, rewriting only the manifest-intersecting segments (see
-        sigstore.delete_ids_from_segments for the shared contract).
-        Returns the number of segments rewritten."""
-        from .layout import write_range_clustered
-        from .sigstore import delete_ids_from_segments
-
-        return delete_ids_from_segments(
-            spark,
-            ids,
-            id_col="vec_id",
-            segments=self.segments(),
-            seg_path=lambda s: self._path(f"seg={s['seg']}"),
-            write_segment=lambda df, seg: write_range_clustered(
-                df, self._path(f"seg={seg['seg']}"), ["list_id"], n_files=n_files
-            ),
-            write_manifest=lambda segs: self._write_manifest(segs),
-        )
-
-    def compact_tiered(
-        self, spark: SparkSession, *, fanout: int = 8, n_files: int = 8
-    ) -> int:
-        """LSM-style leveled fold (the sigstore kernel): amortized
-        O(batch·log) rewrite per append instead of compact()'s full
-        O(store) fold — the shape a continuously-fed vector index runs
-        (pipelines/ingest_semdedup.py appends per batch; footer-open
-        cost stays O(fanout·levels))."""
-        from .layout import write_range_clustered
-        from .sigstore import compact_tiered_segments
-
-        return compact_tiered_segments(
-            spark,
-            segments=self.segments(),
-            fanout=fanout,
-            seg_path=lambda s: self._path(f"seg={s['seg']}"),
-            write_segment=lambda df, seg: write_range_clustered(
-                df, self._path(f"seg={seg['seg']}"), ["list_id"], n_files=n_files
-            ),
-            write_manifest=lambda segs: self._write_manifest(segs),
-        )
-
-    def compact(self, spark: SparkSession, *, n_files: int = 8) -> int:
-        """Fold all segments into one list-clustered segment (bounds
-        footer-open cost). Single-writer, like sigstore.compact."""
-        segments = self.segments()
-        if len(segments) <= 1:
-            return len(segments)
-        df = spark.read.parquet(*[self._path(f"seg={s['seg']}") for s in segments])
-        merged = {
-            "seg": max(s["seg"] for s in segments) + 1,
-            "id_min": min(s["id_min"] for s in segments),
-            "id_max": max(s["id_max"] for s in segments),
-        }
-        from .layout import write_range_clustered
-
-        merged["rows"] = write_range_clustered(
-            df, self._path(f"seg={merged['seg']}"), ["list_id"], n_files=n_files
-        )
-        self._write_manifest([merged])
-        import shutil
-
-        for s in segments:
-            shutil.rmtree(self._path(f"seg={s['seg']}"), ignore_errors=True)
-        return 1
 
     # -- reads ---------------------------------------------------------
     def read_lists(
@@ -708,30 +603,17 @@ class IVFStore:
         facet pruning happens at the parquet reader next to the list
         pruning, never as a post-fetch join (the TermStore-attrs
         convention; plan-asserted in tests/test_ivfstore.py)."""
-        segs = self.segments()
-        if not segs or not list_ids:
+        man = self.load()
+        if not man.segments or not list_ids:
             return None
-        # In(list_id) pruning via layout.pruned_isin: one pushed In
-        # under the cap (the common nprobe read); past it, a post-scan
-        # InSet on small/unknown stores and chunked pushed Ins once the
-        # manifest row counts (recorded at append) say the store is
-        # large enough for row-group pruning to beat per-branch scan
-        # scheduling.
-        from .layout import pruned_isin
-
-        known = [s.get("rows") for s in segs]
-        store_rows = sum(known) if all(r is not None for r in known) else None
-        df = spark.read.parquet(*[self._path(f"seg={s['seg']}") for s in segs])
-        df = pruned_isin(
-            spark, df, "list_id", [int(x) for x in list_ids],
-            store_rows=store_rows,
-        )
+        df = self._read(spark, man.segments, "list_id", [int(x) for x in list_ids])
         if attr_filter is not None:
             col, values = attr_filter
-            if col not in self.attr_names():
+            declared = man.meta.get("attrs", [])
+            if col not in declared:
                 raise ValueError(
                     f"attr filter on {col!r} but store sidecar is "
-                    f"{self.attr_names()} — append with attrs= first"
+                    f"{declared} — append with attrs= first"
                 )
             df = df.filter(F.col(col).isin(list(values)))
         return df

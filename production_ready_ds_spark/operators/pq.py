@@ -41,11 +41,11 @@ Spark shapes (the 100 TB contract):
 from __future__ import annotations
 
 import json
-import os
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .segments import write_json_atomic
 
 
 class PQCodec:
@@ -120,14 +120,10 @@ class PQCodec:
         IVFStore residual flag) — the ONE owner of the on-disk PQ JSON
         format; ``load`` ignores unknown keys so metadata round-trips
         through foreign readers."""
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
         payload = {"codebooks": [c.tolist() for c in self.codebooks]}
         if extra:
             payload.update(extra)
-        with open(tmp, "w") as fh:
-            json.dump(payload, fh)
-        os.replace(tmp, path)
+        write_json_atomic(path, payload)
 
     @classmethod
     def load(cls, path: str) -> "PQCodec":

@@ -7,18 +7,14 @@ ingest batch O(corpus) — `filter(doc_id < lo)` re-read the whole store,
 the known-ids anti-join re-read it again, and the band-bucket candidate
 join shuffled all of it. This store kills all three scans:
 
-- **Segments, not a flat append.** Each append lands as its own
-  subdirectory ``seg=<n>/`` written via
-  :func:`..operators.layout.write_range_clustered` on ``(band, key)``,
-  so every file and row group owns a tight slice of the bucket-key
-  domain (parquet min/max stats prune it).
+- **Segments, not a flat append.** Each append is its own segment,
+  range-clustered on ``(band, key)``, so every file and row group owns
+  a tight slice of the bucket-key domain (parquet min/max stats prune
+  it).
 - **A manifest instead of a membership scan.** ``_MANIFEST.json`` holds
-  each segment's ``(id_min, id_max, rows)``. "Which docs are already
-  indexed?" and "everything earlier than id `lo`" become metadata
-  lookups that select SEGMENT PATHS — the store itself is never opened
-  to answer them. (The reference keeps completeness as target-file
-  existence, `00_training_pipeline.py` via Luigi `output()`; the
-  manifest is that idea applied to dedup state.)
+  each segment's ``(id_min, id_max, rows)``: "which docs are already
+  indexed?" and "everything earlier than id `lo`" select segment paths
+  without opening the store.
 - **Bucket-key pruning on the candidate join.** The new batch's band
   keys (bounded by batch_size x n_bands) are collected and pushed as an
   ``In(key, ...)`` parquet filter against the range-clustered segments,
@@ -27,28 +23,18 @@ join shuffled all of it. This store kills all three scans:
   corpus size.
 
 Per-batch cost: segment selection O(#segments) manifest entries +
-matched row groups ~ O(batch). Footer opens grow with segment count —
-:meth:`SignatureStore.compact` folds segments back into one
-range-clustered segment (run it every N batches, like lakehouse
-OPTIMIZE). Single-writer assumption, same as the reference's Luigi
-scheduler: concurrent appends can interleave manifest replaces and drop
-a segment registration (a table format makes this transactional at
-scale).
+matched row groups ~ O(batch). The segment lifecycle (format, crash
+ordering, folding, deletion) is described once, in :mod:`.segments`.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import MINHASH_FAMILY
-from .layout import write_range_clustered
+from .segments import Manifest, SegmentStore, overlapping
 
-MANIFEST = "_MANIFEST.json"
 # Above this many collected bucket keys, skip the IN pushdown (the
 # predicate itself gets expensive) and fall back to scanning the
 # selected segments — correctness is identical, only pruning is lost.
@@ -71,7 +57,7 @@ def collect_prune_keys(df, col: str = "key") -> list | None:
     return [r[0] for r in rows]
 
 
-class SignatureStore:
+class SignatureStore(SegmentStore):
     """Persistent banded-signature store (one row per (doc, band),
     a ``band``/``key`` blocking pair plus whatever signature columns
     the family carries — ``mh0..mhN`` for MinHash, ``b0..b7`` for the
@@ -81,22 +67,17 @@ class SignatureStore:
     recipe (incomparable integers would void every candidate join);
     the default is this engine's MinHash family."""
 
+    MANIFEST = "_MANIFEST.json"
+    CLUSTER_BY = ["band", "key"]
+    ID_COL = "doc_id"
+
     def __init__(self, root: str, family: str | None = None) -> None:
-        self.root = root
+        super().__init__(root)
         self.family = MINHASH_FAMILY if family is None else family
 
-    # -- manifest -----------------------------------------------------
-    def _manifest_path(self) -> str:
-        return os.path.join(self.root, MANIFEST)
-
-    def segments(self) -> list[dict]:
-        try:
-            with open(self._manifest_path()) as fh:
-                data = json.load(fh)
-        except FileNotFoundError:
-            return []
-        fam = data.get("family")
-        if data["segments"] and fam != self.family:
+    def _check(self, man: Manifest) -> None:
+        fam = man.meta.get("family")
+        if man.segments and fam != self.family:
             # The ingest-recipe staleness rule (same as the TermStore /
             # IVF caches): signatures from a different hash family are
             # incomparable integers — serving them would silently void
@@ -106,17 +87,6 @@ class SignatureStore:
                 f"family {fam!r}; this reader expects {self.family!r}. "
                 "Rebuild the store (delete the directory and re-ingest)."
             )
-        return data["segments"]
-
-    def _write_manifest(self, segments: list[dict]) -> None:
-        os.makedirs(self.root, exist_ok=True)
-        tmp = self._manifest_path() + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump({"segments": segments, "family": self.family}, fh, indent=1)
-        os.replace(tmp, self._manifest_path())
-
-    def _seg_path(self, seg: dict) -> str:
-        return os.path.join(self.root, f"seg={seg['seg']}")
 
     # -- reads --------------------------------------------------------
     def known_ids(
@@ -126,13 +96,11 @@ class SignatureStore:
         — reads ONLY the id column of segments whose manifest range
         intersects, or returns None when no segment can (the common
         new-batch case: zero store IO)."""
-        hit = [
-            s for s in self.segments() if s["id_min"] <= id_max and s["id_max"] >= id_min
-        ]
+        hit = overlapping(self.segments(), id_min, id_max)
         if not hit:
             return None
         return (
-            spark.read.parquet(*[self._seg_path(s) for s in hit])
+            self._read(spark, hit)
             .select(id_col)
             .filter((F.col(id_col) >= id_min) & (F.col(id_col) <= id_max))
             .distinct()
@@ -155,28 +123,21 @@ class SignatureStore:
         compaction), so the usual case pushes no id filter at all.
         ``keys`` (the new batch's band-bucket keys) become an
         ``In(key, ...)`` filter that parquet stats evaluate per row
-        group — on range-clustered segments that is the O(batch) read.
-        Returns None when no segment qualifies."""
+        group — on range-clustered segments that is the O(batch) read
+        (layout.pruned_isin: one pushed In under its cap, past it a
+        post-scan InSet or chunked pushed Ins, decided by the manifest
+        row counts). Returns None when no segment qualifies."""
         segs = self.segments()
         if id_below is not None:
             segs = [s for s in segs if s["id_min"] < id_below]
         if not segs:
             return None
-        df = spark.read.parquet(*[self._seg_path(s) for s in segs])
+        if keys is not None and 0 < len(keys) <= MAX_PRUNE_KEYS:
+            df = self._read(spark, segs, "key", keys)
+        else:
+            df = self._read(spark, segs)
         if id_below is not None and any(s["id_max"] >= id_below for s in segs):
             df = df.filter(F.col(id_col) < id_below)
-        if keys is not None and 0 < len(keys) <= MAX_PRUNE_KEYS:
-            # In(key) pruning via layout.pruned_isin: one pushed In
-            # under the cap; past it, a post-scan InSet on small/
-            # unknown stores and chunked pushed Ins once the selected
-            # segments are known-large enough for row-group pruning to
-            # beat per-branch scan scheduling (the manifest row counts
-            # recorded at append feed the decision).
-            from .layout import pruned_isin
-
-            known = [s["rows"] for s in segs]
-            store_rows = sum(known) if all(r is not None for r in known) else None
-            df = pruned_isin(spark, df, "key", keys, store_rows=store_rows)
         return df
 
     # -- writes -------------------------------------------------------
@@ -196,10 +157,8 @@ class SignatureStore:
         recompute case, where signatures are already indexed and the
         caller re-derived them deterministically rather than re-reading
         them (pipelines/ingest_dedup.py)."""
-        segments = self.segments()
-        if skip_if_range_indexed and any(
-            s["id_min"] <= id_max and s["id_max"] >= id_min for s in segments
-        ):
+        man = self.load()
+        if skip_if_range_indexed and overlapping(man.segments, id_min, id_max):
             return False
         if not bands.take(1):
             # never register an EMPTY segment (an id-range gap spanning
@@ -207,239 +166,20 @@ class SignatureStore:
             # survivor set emptied upstream): a zero-row parquet dir has
             # no part files, so a later read whose manifest selection
             # hits only empty segments dies on schema inference —
-            # permanently poisoning the store (the IVFStore.append
-            # bounds-agg guard, applied here; round-11 review #4 moved
-            # it from one caller into the store where it belongs)
+            # permanently poisoning the store
             return False
-        seg = {
-            "seg": (max((s["seg"] for s in segments), default=-1) + 1),
-            "id_min": id_min,
-            "id_max": id_max,
-            "rows": rows,
-        }
-        written = write_range_clustered(
-            bands, self._seg_path(seg), ["band", "key"], n_files=n_files
-        )
-        if rows is None:
-            # record the true segment size, observed on the write job
-            # itself (no extra read): the manifest row totals drive
-            # read_signatures' density decision between a post-scan
-            # InSet and chunked pushed Ins (layout.pruned_isin) — an
-            # unknown size forfeits chunked row-group pruning on
-            # planet-sized stores
-            seg["rows"] = written
-        # Manifest is replaced only after the segment data is durable:
-        # a crash between the two writes leaves an unregistered (and
-        # thus invisible) directory, never a dangling manifest entry.
-        self._write_manifest([*segments, seg])
+        seg = {"seg": self._new_seg(man.segments), "id_min": id_min, "id_max": id_max}
+        written = self._write(bands, seg, n_files)
+        # the true segment size, observed on the write itself, unless
+        # the caller declared one: the manifest row totals drive the
+        # pruned read's InSet-vs-chunked-In decision (layout.pruned_isin)
+        seg["rows"] = written if rows is None else rows
+        self._commit([*man.segments, seg], dict(man.meta, family=self.family))
         return True
-
-    def delete_ids(
-        self, spark: SparkSession, ids: list[int], *, n_files: int = 4
-    ) -> int:
-        """Right-to-be-forgotten: remove every signature row of the
-        given doc ids, rewriting only the manifest-intersecting
-        segments (delete_ids_from_segments has the full contract).
-        Returns the number of segments rewritten."""
-        return delete_ids_from_segments(
-            spark,
-            ids,
-            id_col="doc_id",
-            segments=self.segments(),
-            seg_path=self._seg_path,
-            write_segment=lambda df, seg: write_range_clustered(
-                df, self._seg_path(seg), ["band", "key"], n_files=n_files
-            ),
-            write_manifest=self._write_manifest,
-        )
 
     def compact_tiered(
         self, spark: SparkSession, *, fanout: int = 8, n_files: int = 8
     ) -> int:
-        """LSM-style leveled fold: whenever any level holds ≥ ``fanout``
-        segments, merge that level into ONE segment at level+1, then
-        cascade. Appends land at level 0, so each row is rewritten at
-        most once per level — amortized compaction cost per batch is
-        O(batch · log_fanout(corpus/batch)), never the O(corpus) a full
-        re-fold on every trigger would pay, and footer-open cost stays
-        O(fanout · levels). Same single-writer contract as append.
-        Returns the segment count after folding."""
-        return compact_tiered_segments(
-            spark,
-            segments=self.segments(),
-            fanout=fanout,
-            seg_path=self._seg_path,
-            write_segment=lambda df, seg: write_range_clustered(
-                df, self._seg_path(seg), ["band", "key"], n_files=n_files
-            ),
-            write_manifest=self._write_manifest,
-            merge_fields=lambda ripe: {
-                "rows": sum(s["rows"] for s in ripe)
-                if all(s["rows"] is not None for s in ripe)
-                else None
-            },
-        )
-
-    def compact(self, spark: SparkSession, *, n_files: int = 8) -> int:
-        """Fold all segments into one range-clustered segment (bounds
-        the footer-open cost that grows with segment count). Returns the
-        new segment count (1, or 0 when the store is empty). Same
-        reader-visibility caveat as layout._swap_into: readers racing
-        the swap can see the store mid-rewrite; run it from the same
-        single-writer scheduler slot as appends."""
-        segments = self.segments()
-        if len(segments) <= 1:
-            return len(segments)
-        df = spark.read.parquet(*[self._seg_path(s) for s in segments])
-        merged = {
-            "seg": max(s["seg"] for s in segments) + 1,
-            "id_min": min(s["id_min"] for s in segments),
-            "id_max": max(s["id_max"] for s in segments),
-            "rows": sum(s["rows"] for s in segments) if all(s["rows"] is not None for s in segments) else None,
-        }
-        # the observed write count repairs rows=None inherited from
-        # legacy segments (pre-row-tracking appends, delete rewrites)
-        merged["rows"] = write_range_clustered(
-            df, self._seg_path(merged), ["band", "key"], n_files=n_files
-        )
-        self._write_manifest([merged])
-        import shutil
-
-        for s in segments:
-            shutil.rmtree(self._seg_path(s), ignore_errors=True)
-        return 1
-
-
-def compact_tiered_segments(
-    spark: SparkSession,
-    *,
-    segments: list[dict],
-    fanout: int,
-    seg_path,
-    write_segment,
-    write_manifest,
-    merge_fields=None,
-    extra_merge=None,
-    extra_cleanup=None,
-) -> int:
-    """Shared LSM-style leveled-fold kernel for the manifest-backed
-    stores (SignatureStore / TermStore / IVFStore): whenever any level
-    holds ≥ ``fanout`` segments, merge that level into ONE segment at
-    level+1 and cascade — each row rewritten at most once per level,
-    so amortized compaction cost per batch is
-    O(batch · log_fanout(corpus/batch)) and footer-open cost stays
-    O(fanout · levels), never the O(corpus) a full re-fold on every
-    trigger would pay.
-
-    ``merge_fields(ripe) -> dict`` enriches the merged manifest entry
-    with store-specific statistics (sigstore's rows, termstore's
-    n_docs/sum_dl); ``extra_merge(ripe, merged)`` materializes any
-    sidecar data BEFORE the manifest swap (termstore's doc-length
-    docmap — the append crash ordering: all data durable, then one
-    manifest replace); ``extra_cleanup(seg)`` removes sidecar dirs of
-    folded segments. Single-writer contract, like append/compact.
-    Returns the segment count after folding."""
-    import shutil
-
-    while True:
-        by_level: dict[int, list[dict]] = {}
-        for s in segments:
-            by_level.setdefault(int(s.get("level", 0)), []).append(s)
-        ripe = next(
-            (g for _, g in sorted(by_level.items()) if len(g) >= fanout), None
-        )
-        if ripe is None:
-            return len(segments)
-        df = spark.read.parquet(*[seg_path(s) for s in ripe])
-        merged = {
-            "seg": max(s["seg"] for s in segments) + 1,
-            "id_min": min(s["id_min"] for s in ripe),
-            "id_max": max(s["id_max"] for s in ripe),
-            "level": int(ripe[0].get("level", 0)) + 1,
-        }
-        if merge_fields is not None:
-            merged.update(merge_fields(ripe))
-        written = write_segment(df, merged)
-        if isinstance(written, int):
-            # exact observed count from the rewrite: repairs rows=None
-            # inherited from legacy/deleted segments, overrides the
-            # merge_fields sum where both exist (they agree when all
-            # inputs were known)
-            merged["rows"] = written
-        if extra_merge is not None:
-            extra_merge(ripe, merged)
-        ripe_ids = {s["seg"] for s in ripe}
-        segments = [s for s in segments if s["seg"] not in ripe_ids] + [merged]
-        write_manifest(segments)
-        for s in ripe:
-            shutil.rmtree(seg_path(s), ignore_errors=True)
-            if extra_cleanup is not None:
-                extra_cleanup(s)
-
-
-def delete_ids_from_segments(
-    spark: SparkSession,
-    ids: list[int],
-    *,
-    id_col: str,
-    segments: list[dict],
-    seg_path,
-    write_segment,
-    write_manifest,
-) -> int:
-    """Shared right-to-be-forgotten kernel for the manifest-backed
-    stores (SignatureStore.delete_ids / IVFStore.delete_ids): rewrite
-    ONLY the segments whose manifest id-range intersects the deletion
-    set — every other segment is untouched bytes, which is what makes
-    targeted deletion viable at 100 TB: cost is O(affected segments),
-    not O(store).
-
-    ``seg_path(seg) -> str`` locates a segment directory;
-    ``write_segment(df, seg)`` re-clusters and writes the filtered
-    frame the owning store's way; ``write_manifest(list)`` swaps the
-    manifest. Each affected segment is replaced by a NEW registered
-    segment (the append crash ordering: data durable, then one
-    manifest swap, then old directories removed) keeping its original
-    id bounds — bounds are a covering range, and deletion only shrinks
-    the true span. Returns the number of segments rewritten.
-    Single-writer, like append/compact. Deletion requests are assumed
-    bounded (a GDPR batch, not a corpus) — the ids ride as one isin
-    predicate; at row-group level the range-clustered layouts keep the
-    rewrite's read side tight too."""
-    import shutil
-
-    if not ids:
-        return 0
-    id_list = [int(x) for x in ids]
-    # per-ID interval check, NOT the [min, max] envelope: a deletion
-    # batch spanning the id space (e.g. {5, 99999}) would otherwise
-    # intersect EVERY segment and rewrite the whole store — exactly
-    # the O(store) cost this kernel exists to avoid
-    affected = [
-        s
-        for s in segments
-        if any(s["id_min"] <= i <= s["id_max"] for i in id_list)
-    ]
-    if not affected:
-        return 0
-    next_seg = max(s["seg"] for s in segments) + 1
-    replaced: dict[int, dict] = {}
-    for s in affected:
-        kept = spark.read.parquet(seg_path(s)).filter(
-            ~F.col(id_col).isin(id_list)
-        )
-        new = dict(s, seg=next_seg)
-        next_seg += 1
-        written = write_segment(kept, new)
-        # the pre-delete row count is stale: take the rewrite's
-        # observed count when the writer reports one, else the
-        # documented unknown
-        if isinstance(written, int):
-            new["rows"] = written
-        elif "rows" in new:
-            new["rows"] = None
-        replaced[s["seg"]] = new
-    write_manifest([replaced.get(s["seg"], s) for s in segments])
-    for s in affected:
-        shutil.rmtree(seg_path(s), ignore_errors=True)
-    return len(affected)
+        # defined on this class, not only inherited: perfbench/spans.py
+        # times it by patching SignatureStore.__dict__
+        return super().compact_tiered(spark, fanout=fanout, n_files=n_files)

@@ -9,13 +9,13 @@ one-off batch job, the wrong one for a search service. This store
 moves the tokenize + tf/dl work to INGEST time:
 
 - **Postings, term-clustered AND positional.** Each append lands as
-  ``seg=<n>/`` of ``(term, doc_id, tf, dl, positions)`` rows written via
-  :func:`.layout.write_range_clustered` on ``term``, so every file and
-  row group owns a slice of the term domain and a query's
-  ``In(term, ...)`` predicate prunes to the matched row groups — the
-  inverted-list read, not a table scan. ``dl`` (doc length) is
-  DENORMALIZED into every posting row: +8 bytes/posting buys scoring
-  without any join back to a doc-length table, and ``positions``
+  one segment of ``(term, doc_id, tf, dl, positions)`` rows clustered
+  on ``term``, so every file and row group owns a slice of the term
+  domain and a query's ``In(term, ...)`` predicate prunes to the
+  matched row groups — the inverted-list read, not a table scan.
+  ``dl`` (doc length) is DENORMALIZED into every posting row: +8
+  bytes/posting buys scoring without any join back to a doc-length
+  table, and ``positions``
   (sorted 1-based token offsets) makes the store a POSITIONAL index:
   ``search_phrase`` answers exact-phrase queries by intersecting the
   phrase terms' offset lists — never re-reading text.
@@ -35,33 +35,31 @@ moves the tokenize + tf/dl work to INGEST time:
   integers, not approximately equal (equivalence-tested).
 - **Append is O(batch)** (tokenize + one (doc, term) count shuffle +
   one clustered segment write), idempotent under the sigstore
-  ``skip_if_range_indexed`` contract, with the same crash ordering
-  (segment data durable before the manifest replace) and single-writer
-  assumption. ``compact`` folds segments to bound footer opens.
+  ``skip_if_range_indexed`` contract.
+- **A doc sidecar per segment** (``doc_id``, ``dl`` and any declared
+  attrs, one row per document): ``delete_ids`` DECREMENTS each
+  rewritten segment's ``n_docs``/``sum_dl`` by the deleted docs'
+  recorded lengths, so post-delete scores are integer-equal to a fresh
+  build of the surviving corpus (equivalence-tested). Stats are
+  DOCUMENT-level — a zero-token doc counts in N with no posting row —
+  so postings alone could never decrement exactly.
 
-Deletion (RTBF parity with sigstore/IVFStore): ``delete_ids`` rewrites
-only the manifest-intersecting segments (postings AND the per-segment
-``docs_seg=<n>/`` doc-length sidecar) and DECREMENTS each segment's
-``n_docs``/``sum_dl`` by the deleted docs' recorded lengths, so
-post-delete scores are integer-equal to a fresh build of the surviving
-corpus (equivalence-tested). The sidecar exists because stats are
-DOCUMENT-level: a zero-token doc contributes to N with no posting row,
-so postings alone could never decrement exactly.
+The segment lifecycle (format, crash ordering, folding, deletion) is
+described once, in :mod:`.segments`.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.ranking import ranked_topk
-from .layout import write_range_clustered
+from .segments import DROP, KEEP, SegmentStore, overlapping
 
-MANIFEST = "_term_manifest.json"
+#: prefix of each segment's doc-table sidecar directory
+DOCS = "docs_"
 
 #: canonical BM25 constants — defined HERE (operators never import the
 #: queries package, so this is the cycle-safe home) and imported by
@@ -80,39 +78,13 @@ STORE_VERSION = 4  # v4: sidecar may carry doc-attribute facet columns
 FUZZY_MAX_MATCHED = 1024
 
 
-class TermStore:
+class TermStore(SegmentStore):
     """Persistent inverted index (see module docstring)."""
 
-    def __init__(self, root: str) -> None:
-        self.root = root
-
-    # -- manifest ------------------------------------------------------
-    def _path(self, name: str) -> str:
-        return os.path.join(self.root, name)
-
-    def segments(self) -> list[dict]:
-        try:
-            with open(self._path(MANIFEST)) as fh:
-                return json.load(fh)["segments"]
-        except FileNotFoundError:
-            return []
-
-    def _write_manifest(
-        self, segments: list[dict], analyzer: str | None = None
-    ) -> None:
-        """Replace the segment list, PRESERVING the analyzer label —
-        every manifest writer (append / delete / compact) goes through
-        here so maintenance can never silently relabel a stemmed
-        store (the IVFStore attrs-preservation convention)."""
-        os.makedirs(self.root, exist_ok=True)
-        payload: dict = {"segments": segments}
-        label = self.analyzer_name() if analyzer is None else analyzer
-        if label != "standard":
-            payload["analyzer"] = label
-        tmp = self._path(MANIFEST) + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(payload, fh)
-        os.replace(tmp, self._path(MANIFEST))
+    MANIFEST = "_term_manifest.json"
+    CLUSTER_BY = ["term"]
+    ID_COL = "doc_id"
+    SIDECARS = (DOCS,)
 
     def analyze_terms(self, terms: tuple[str, ...]) -> tuple[str, ...]:
         """Pass query terms through the analyzer the manifest records
@@ -138,27 +110,7 @@ class TermStore:
         with ("standard" = bare tokens_expr; "snowball" = stem-folded).
         Query terms must pass through the same analyzer — mixed
         analyzers make postings and query vocabulary disjoint."""
-        try:
-            with open(self._path(MANIFEST)) as fh:
-                return json.load(fh).get("analyzer", "standard")
-        except FileNotFoundError:
-            return "standard"
-
-    def _docmap_path(self, seg: dict) -> str:
-        """Path of a segment's doc-length sidecar, with a CLEAR error
-        for stores built before STORE_VERSION 3 (no sidecar on disk):
-        delete/compact would otherwise die mid-rewrite on an unguided
-        PATH_NOT_FOUND — after possibly having written a merged
-        postings dir. Callers resolve every needed sidecar BEFORE
-        writing anything."""
-        p = self._path(f"docs_seg={seg['seg']}")
-        if not os.path.isdir(p):
-            raise ValueError(
-                f"TermStore at {self.root} has no doc-length sidecar for "
-                f"seg={seg['seg']} — it was built by STORE_VERSION < 3; "
-                "rebuild the index to enable delete_ids/compact"
-            )
-        return p
+        return self.load().meta.get("analyzer", "standard")
 
     def stats(self) -> tuple[int, int]:
         """(N docs, Σ doc length) across every indexed batch — O(1)
@@ -224,11 +176,13 @@ class TermStore:
         if token_fn is None:
             token_fn = tokens_expr
 
-        segments = self.segments()
-        if segments and self.analyzer_name() != analyzer:
+        man = self.load()
+        segments = man.segments
+        built = man.meta.get("analyzer", "standard")
+        if segments and built != analyzer:
             raise ValueError(
                 f"TermStore at {self.root} was built with analyzer="
-                f"{self.analyzer_name()!r} but this append declares "
+                f"{built!r} but this append declares "
                 f"{analyzer!r} — mixed analyzers make postings and "
                 "query vocabularies disjoint; rebuild the store"
             )
@@ -236,7 +190,7 @@ class TermStore:
         # re-append with different attrs must fail loudly, not silently
         # skip and leave the caller believing the facet is available
         if segments:
-            sidecar = self._path(f"docs_seg={segments[0]['seg']}")
+            sidecar = self.seg_path(segments[0], DOCS)
             if os.path.isdir(sidecar):  # pre-v3 stores have none to check
                 existing = [
                     c
@@ -253,13 +207,8 @@ class TermStore:
                         "rebuild the store)"
                     )
 
-        def range_indexed(lo: int, hi: int) -> bool:
-            return any(
-                s["id_min"] <= hi and s["id_max"] >= lo for s in segments
-            )
-
-        if skip_if_range_indexed and id_min is not None and range_indexed(
-            id_min, id_max
+        if skip_if_range_indexed and id_min is not None and overlapping(
+            segments, id_min, id_max
         ):
             return False
         toks = docs.select(
@@ -278,7 +227,7 @@ class TermStore:
             return False
         if id_min is None:
             id_min, id_max = int(stats_row["lo"]), int(stats_row["hi"])
-            if skip_if_range_indexed and range_indexed(id_min, id_max):
+            if skip_if_range_indexed and overlapping(segments, id_min, id_max):
                 return False
         elif stats_row["lo"] < id_min or stats_row["hi"] > id_max:
             # a mis-declared range + skip_if_range_indexed would
@@ -305,7 +254,7 @@ class TermStore:
             )
         )
         seg = {
-            "seg": max((s["seg"] for s in segments), default=-1) + 1,
+            "seg": self._new_seg(segments),
             "id_min": id_min,
             "id_max": id_max,
             "n_docs": int(stats_row["n"]),
@@ -313,190 +262,49 @@ class TermStore:
         }
         # observed postings row count feeds read_postings' pruned-read
         # density decision (layout.pruned_isin)
-        seg["rows"] = write_range_clustered(
-            postings, self._path(f"seg={seg['seg']}"), ["term"], n_files=n_files
-        )
+        seg["rows"] = self._write(postings, seg, n_files)
         # per-segment doc sidecar (doc_id, dl, *attrs) — ONE row per
         # batch doc incl. zero-token docs; what lets delete_ids
         # decrement n_docs/sum_dl exactly, and what search_filtered
         # prunes candidates from. Tiny: n_docs rows, one file.
-        toks.select(
-            "doc_id", F.size("ts").cast("long").alias("dl"), *attrs
-        ).coalesce(1).write.mode("overwrite").parquet(
-            self._path(f"docs_seg={seg['seg']}")
+        self._write_sidecar(
+            toks.select("doc_id", F.size("ts").cast("long").alias("dl"), *attrs),
+            seg, DOCS,
         )
-        # manifest replaced only after BOTH data dirs are durable (the
-        # sigstore crash ordering)
-        self._write_manifest([*segments, seg], analyzer=analyzer)
+        meta = {k: v for k, v in man.meta.items() if k != "analyzer"}
+        if analyzer != "standard":
+            meta["analyzer"] = analyzer
+        self._commit([*segments, seg], meta)
         return True
 
-    def delete_ids(
-        self, spark: SparkSession, ids: list[int], *, n_files: int = 4
-    ) -> int:
-        """Right-to-be-forgotten: remove the given doc ids from the
-        index so every later search scores EXACTLY as a fresh build of
-        the surviving corpus would — postings rows dropped AND each
-        affected segment's manifest ``n_docs``/``sum_dl`` decremented
-        by the deleted docs' sidecar-recorded lengths (stale stats are
-        the score drift the module docstring warns about). Only
-        manifest-intersecting segments are rewritten (per-ID interval
-        check, the sigstore kernel's rule — cost O(affected segments),
-        not O(store)); a segment emptied of docs is dropped outright.
-        Crash ordering and single-writer contract as append. Returns
-        the number of segments rewritten or dropped."""
-        import shutil
+    def _merge_stats(self, ripe: list[dict]) -> dict:
+        return {
+            "n_docs": sum(int(s["n_docs"]) for s in ripe),
+            "sum_dl": sum(int(s["sum_dl"]) for s in ripe),
+        }
 
-        if not ids:
-            return 0
-        id_list = [int(x) for x in ids]
-        segments = self.segments()
-        affected = [
-            s
-            for s in segments
-            if any(s["id_min"] <= i <= s["id_max"] for i in id_list)
-        ]
-        if not affected:
-            return 0
-        # resolve every sidecar FIRST — a v2 store fails loudly here,
-        # before any rewrite could leave orphan directories
-        docmaps = {s["seg"]: self._docmap_path(s) for s in affected}
-        next_seg = max(s["seg"] for s in segments) + 1
-        replaced: dict[int, dict | None] = {}
-        old_dirs: list[str] = []
-        for s in affected:
-            docmap = spark.read.parquet(docmaps[s["seg"]])
-            gone = docmap.filter(F.col("doc_id").isin(id_list)).agg(
+    def _restat(self, spark: SparkSession, seg: dict, ids: list[int]):
+        """delete_ids keeps BM25 exact: each rewritten segment's
+        ``n_docs``/``sum_dl`` drop by the deleted docs' sidecar-recorded
+        lengths, so later searches score EXACTLY as a fresh build of the
+        surviving corpus. A segment left with no document is dropped."""
+        gone = (
+            spark.read.parquet(self.seg_path(seg, DOCS))
+            .filter(F.col("doc_id").isin(ids))
+            .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.coalesce(F.sum("dl"), F.lit(0)).alias("dl"),
-            ).first()
-            if not gone["n"]:
-                # ids fell in the covering range but none were present
-                replaced[s["seg"]] = s
-                continue
-            old_dirs.append(self._path(f"seg={s['seg']}"))
-            old_dirs.append(docmaps[s["seg"]])
-            # dict(s, ...) preserves every other manifest field — in
-            # particular 'level', or the next compact_tiered would see
-            # a big folded segment back at level 0 and re-merge it with
-            # fresh batches: an O(store) rewrite the LSM contract bans
-            new = dict(
-                s,
-                seg=next_seg,
-                n_docs=int(s["n_docs"]) - int(gone["n"]),
-                sum_dl=int(s["sum_dl"]) - int(gone["dl"]),
             )
-            next_seg += 1
-            if new["n_docs"] <= 0:
-                replaced[s["seg"]] = None  # segment emptied: drop it
-                continue
-            # checkpoint: the kept frame feeds the emptiness probe AND
-            # the rewrite — one read of the old segment, not two
-            kept_post = (
-                spark.read.parquet(self._path(f"seg={s['seg']}"))
-                .filter(~F.col("doc_id").isin(id_list))
-                .localCheckpoint(eager=True)
-            )
-            # repartition(1) (never coalesce) on the all-postings-gone
-            # edge: guarantees one writer task, so the dir always holds
-            # a schema-bearing part file instead of poisoning reads
-            if kept_post.limit(1).count():
-                new["rows"] = write_range_clustered(
-                    kept_post, self._path(f"seg={new['seg']}"), ["term"],
-                    n_files=n_files,
-                )
-            else:
-                kept_post.repartition(1).write.mode("overwrite").parquet(
-                    self._path(f"seg={new['seg']}")
-                )
-                new["rows"] = 0
-            docmap.filter(~F.col("doc_id").isin(id_list)).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(self._path(f"docs_seg={new['seg']}"))
-            replaced[s["seg"]] = new
-        new_manifest = []
-        for s in segments:
-            r = replaced.get(s["seg"], s)
-            if r is not None:
-                new_manifest.append(r)
-        self._write_manifest(new_manifest)
-        for d in old_dirs:
-            shutil.rmtree(d, ignore_errors=True)
-        return sum(
-            1 for s in affected if replaced.get(s["seg"]) is not s
+            .first()
         )
-
-    def compact_tiered(
-        self, spark: SparkSession, *, fanout: int = 8, n_files: int = 8
-    ) -> int:
-        """LSM-style leveled fold (the sigstore kernel): whenever any
-        level holds ≥ ``fanout`` segments, merge into one at level+1 —
-        amortized O(batch·log) rewrite per ingest batch instead of
-        compact()'s full O(store) fold, the shape a continuously-fed
-        search index runs from its single-writer slot. Manifest stats
-        sum across the folded segments; the doc-length sidecar merges
-        alongside BEFORE the manifest swap (crash ordering)."""
-        import shutil
-
-        from .sigstore import compact_tiered_segments
-
-        for s in self.segments():  # fail loudly on a pre-v3 store
-            self._docmap_path(s)
-
-        def extra_merge(ripe: list[dict], merged: dict) -> None:
-            spark.read.parquet(
-                *[self._docmap_path(s) for s in ripe]
-            ).coalesce(1).write.mode("overwrite").parquet(
-                self._path(f"docs_seg={merged['seg']}")
-            )
-
-        def extra_cleanup(s: dict) -> None:
-            shutil.rmtree(self._path(f"docs_seg={s['seg']}"), ignore_errors=True)
-
-        return compact_tiered_segments(
-            spark,
-            segments=self.segments(),
-            fanout=fanout,
-            seg_path=lambda s: self._path(f"seg={s['seg']}"),
-            write_segment=lambda df, seg: write_range_clustered(
-                df, self._path(f"seg={seg['seg']}"), ["term"], n_files=n_files
-            ),
-            write_manifest=self._write_manifest,
-            merge_fields=lambda ripe: {
-                "n_docs": sum(int(s["n_docs"]) for s in ripe),
-                "sum_dl": sum(int(s["sum_dl"]) for s in ripe),
-            },
-            extra_merge=extra_merge,
-            extra_cleanup=extra_cleanup,
-        )
-
-    def compact(self, spark: SparkSession, *, n_files: int = 8) -> int:
-        """Fold all segments into one term-clustered segment."""
-        segments = self.segments()
-        if len(segments) <= 1:
-            return len(segments)
-        # resolve sidecars BEFORE writing anything (pre-v3 store check)
-        doc_paths = [self._docmap_path(s) for s in segments]
-        df = spark.read.parquet(*[self._path(f"seg={s['seg']}") for s in segments])
-        merged = {
-            "seg": max(s["seg"] for s in segments) + 1,
-            "id_min": min(s["id_min"] for s in segments),
-            "id_max": max(s["id_max"] for s in segments),
-            "n_docs": sum(s["n_docs"] for s in segments),
-            "sum_dl": sum(s["sum_dl"] for s in segments),
+        if not gone["n"]:
+            return KEEP  # ids fell in the covering range but none were present
+        if int(seg["n_docs"]) - int(gone["n"]) <= 0:
+            return DROP
+        return {
+            "n_docs": int(seg["n_docs"]) - int(gone["n"]),
+            "sum_dl": int(seg["sum_dl"]) - int(gone["dl"]),
         }
-        merged["rows"] = write_range_clustered(
-            df, self._path(f"seg={merged['seg']}"), ["term"], n_files=n_files
-        )
-        spark.read.parquet(*doc_paths).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(self._path(f"docs_seg={merged['seg']}"))
-        self._write_manifest([merged])
-        import shutil
-
-        for s in segments:
-            shutil.rmtree(self._path(f"seg={s['seg']}"), ignore_errors=True)
-            shutil.rmtree(self._path(f"docs_seg={s['seg']}"), ignore_errors=True)
-        return 1
 
     # -- reads ---------------------------------------------------------
     def read_postings(self, spark: SparkSession, terms: list[str]) -> DataFrame | None:
@@ -508,14 +316,7 @@ class TermStore:
         segs = self.segments()
         if not segs or not terms:
             return None
-        from .layout import pruned_isin
-
-        known = [s.get("rows") for s in segs]
-        store_rows = sum(known) if all(r is not None for r in known) else None
-        df = spark.read.parquet(*[self._path(f"seg={s['seg']}") for s in segs])
-        return pruned_isin(
-            spark, df, "term", [str(t) for t in terms], store_rows=store_rows
-        )
+        return self._read(spark, segs, "term", [str(t) for t in terms])
 
     def search(
         self, spark: SparkSession, terms: tuple[str, ...], *, k: int = 20,
@@ -548,12 +349,15 @@ class TermStore:
         for a filtered-out document (never post-filtered ranks).
 
         Terms pass through the store's recorded analyzer first
-        (analyze_terms) — pass RAW terms, not pre-stemmed ones."""
-        terms = tuple(dict.fromkeys(self.analyze_terms(terms)))
-        post = self.read_postings(spark, list(terms))
-        if post is None:
-            raise ValueError(f"TermStore at {self.root} is empty or no terms given")
-        n, sumdl = self.stats()
+        (analyze_terms) — pass RAW terms, not pre-stemmed ones. The
+        analyzer, postings and statistics come from one manifest
+        snapshot."""
+        with self.snapshot():
+            terms = tuple(dict.fromkeys(self.analyze_terms(terms)))
+            post = self.read_postings(spark, list(terms))
+            if post is None:
+                raise ValueError(f"TermStore at {self.root} is empty or no terms given")
+            n, sumdl = self.stats()
         # per-term document frequency — exact, from the fetched lists
         # BEFORE any candidate pruning (filters restrict candidates,
         # never term statistics); ≤ |terms| rows, broadcast back
@@ -619,20 +423,23 @@ class TermStore:
         at O(matched ∧ eligible postings). Post-filtering a top-k would
         instead be WRONG, not just slow: docs k+1..∞ matching the facet
         could never surface."""
-        segs = self.segments()
-        if not segs:
-            raise ValueError(f"TermStore at {self.root} is empty")
-        sidecars = spark.read.parquet(*[self._docmap_path(s) for s in segs])
-        if attr not in sidecars.columns:
-            raise ValueError(
-                f"TermStore at {self.root} has no {attr!r} doc attribute — "
-                f"sidecar columns are {sidecars.columns}; pass "
-                f"attrs=({attr!r},) at append time to enable this facet"
+        with self.snapshot() as man:
+            if not man.segments:
+                raise ValueError(f"TermStore at {self.root} is empty")
+            self._require_sidecars(man.segments)
+            sidecars = spark.read.parquet(
+                *[self.seg_path(s, DOCS) for s in man.segments]
             )
-        eligible = sidecars.filter(
-            F.col(attr).isin([str(v) for v in values])
-        ).select("doc_id")
-        return self.search(spark, terms, k=k, k1=k1, b=b, eligible=eligible)
+            if attr not in sidecars.columns:
+                raise ValueError(
+                    f"TermStore at {self.root} has no {attr!r} doc attribute — "
+                    f"sidecar columns are {sidecars.columns}; pass "
+                    f"attrs=({attr!r},) at append time to enable this facet"
+                )
+            eligible = sidecars.filter(
+                F.col(attr).isin([str(v) for v in values])
+            ).select("doc_id")
+            return self.search(spark, terms, k=k, k1=k1, b=b, eligible=eligible)
 
     def read_postings_range(
         self, spark: SparkSession, lo: str, hi: str | None
@@ -648,8 +455,7 @@ class TermStore:
         segs = self.segments()
         if not segs:
             return None
-        df = spark.read.parquet(*[self._path(f"seg={s['seg']}") for s in segs])
-        df = df.filter(F.col("term") >= lo)
+        df = self._read(spark, segs).filter(F.col("term") >= lo)
         if hi is not None:
             df = df.filter(F.col("term") < hi)
         return df
@@ -702,11 +508,7 @@ class TermStore:
         segs = self.segments()
         if not segs or not terms:
             raise ValueError(f"TermStore at {self.root} is empty or no terms given")
-        vocab = (
-            spark.read.parquet(*[self._path(f"seg={s['seg']}") for s in segs])
-            .select("term")
-            .distinct()
-        )
+        vocab = self._read(spark, segs).select("term").distinct()
         d = F.levenshtein(F.col("term"), F.lit(terms[0]))
         for q in terms[1:]:
             d = F.least(d, F.levenshtein(F.col("term"), F.lit(q)))
@@ -721,7 +523,7 @@ class TermStore:
             return spark.createDataFrame(
                 [], "rank long, doc_id long, n_hits long, n_terms long"
             )
-        post = self.read_postings(spark, matched)
+        post = self._read(spark, segs, "term", matched)
         per_doc = post.groupBy("doc_id").agg(
             F.sum("tf").cast("long").alias("n_hits"),
             F.count(F.lit(1)).cast("long").alias("n_terms"),

@@ -114,5 +114,8 @@ class DedupBatch(SparkTask):
         # already a segment), and a crash between the writes leaves an
         # incomplete task, never a complete one with missing signatures.
         store.append(fresh, id_min=lo, id_max=hi - 1, skip_if_range_indexed=True)
-        store.compact_tiered(spark, fanout=COMPACT_EVERY)
         accepted.write.mode("overwrite").parquet(self.output().path)
+        # Fold AFTER publishing: ``accepted`` reads the earlier segments
+        # lazily, and a fold removes their directories. A crash before
+        # the fold leaves a valid store; the next batch folds when ripe.
+        store.compact_tiered(spark, fanout=COMPACT_EVERY)

@@ -25,9 +25,8 @@ contract, equivalence-tested in tests/test_termstore.py).
 re-reads or re-tokenizes earlier batches, and post-ingest queries read
 O(query terms) postings via the pushed In(term) inverted-list read
 (plan-asserted in tests/test_ingest_termstore.py). Footer-open cost
-grows with segment count: run ``TermStore.compact`` periodically from
-the same single-writer slot (sigstore.compact_tiered is the leveled
-template if full folds ever dominate)."""
+grows with segment count: run ``TermStore.compact_tiered`` (or a full
+``compact``) from the same single-writer slot."""
 
 from __future__ import annotations
 

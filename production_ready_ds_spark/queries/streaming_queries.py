@@ -386,7 +386,7 @@ def _stream_built_termstore(spark: SparkSession, sf_dir: str):
     import os
     import shutil
 
-    from ..operators.termstore import STORE_VERSION, TermStore
+    from ..operators.termstore import DOCS, STORE_VERSION, TermStore
     from ..streaming.events import _as_stream_dir
     from ..tables import load
     from .llm import FACET_ATTR, _build_lock, _corpus_cache_dir
@@ -405,7 +405,7 @@ def _stream_built_termstore(spark: SparkSession, sf_dir: str):
             segs = done.segments()
             if segs and done.stats()[0] == expected:
                 sidecar_cols = spark.read.parquet(
-                    done._docmap_path(segs[0])  # noqa: SLF001 - same module family
+                    done.seg_path(segs[0], DOCS)
                 ).columns
                 if FACET_ATTR in sidecar_cols:  # complete AND current recipe
                     return done

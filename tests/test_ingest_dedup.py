@@ -112,3 +112,22 @@ def test_crash_between_index_and_publish_leaves_task_incomplete(spark, tmp_path,
     assert spark.read.parquet(f"{root}/ingest/sig_store").count() == store_rows, (
         "guarded append must not re-add the crashed batch's signatures"
     )
+
+
+def test_batch_that_triggers_a_fold_publishes_its_target(spark, tmp_path, monkeypatch):
+    """The tiered fold runs AFTER the target is written: the accepted
+    frame reads the earlier segments lazily, so folding them first
+    removed the files it still had to read (FileNotFoundException on
+    the batch whose append made a level ripe)."""
+    from production_ready_ds_spark.operators.sigstore import SignatureStore
+    from production_ready_ds_spark.pipelines import ingest_dedup as mod
+
+    monkeypatch.setattr(mod, "COMPACT_EVERY", 2)
+    src = _write_source(spark, str(tmp_path / "docs"))
+    root = str(tmp_path / "out")
+    report = build([DedupBatch(data_root=root, source_path=src, batch=1)])
+    assert len(report["ran"]) == 2 and not report["blocked"]
+    assert _accepted(spark, root, 0) == {0, 2}
+    assert _accepted(spark, root, 1) == {BATCH_SIZE + 1}
+    segs = SignatureStore(f"{root}/ingest/sig_store").segments()
+    assert [s["level"] for s in segs] == [1], "batch 1 folded both segments"

@@ -190,9 +190,11 @@ def test_assign_matches_bruteforce_argmin_and_tiebreak(spark, tmp_path, embs):
     small-file parallelizer, a no-op on real lakes — the property that
     keeps append O(batch))."""
     import json
+    import os
 
     import numpy as np
 
+    from production_ready_ds_spark.operators.segments import write_json_atomic
     from production_ready_ds_spark.plans.audit import explain_str
 
     store = IVFStore(str(tmp_path / "bf"))
@@ -205,8 +207,9 @@ def test_assign_matches_bruteforce_argmin_and_tiebreak(spark, tmp_path, embs):
         assert got[r.vec_id] == int(d2.argmin()), r.vec_id
     # exact-tie corpus: duplicate centroids -> lowest list id wins
     dup = IVFStore(str(tmp_path / "tie"))
-    dup._write_json(
-        "_ivf_centroids.json", {"centroids": [[1.0, 0.0], [0.0, 1.0], [1.0, 0.0]]}
+    write_json_atomic(
+        os.path.join(dup.root, "_ivf_centroids.json"),
+        {"centroids": [[1.0, 0.0], [0.0, 1.0], [1.0, 0.0]]},
     )
     vecs = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.9, 0.9])], "vec_id long, embedding array<float>"

@@ -84,7 +84,7 @@ def _input_dirs(df):
 
 def test_manifest_prunes_segment_selection(spark, tmp_path):
     store = _store_with_batches(spark, tmp_path / "s", n_batches=3)
-    seg_paths = {s["seg"]: store._seg_path(s) for s in store.segments()}
+    seg_paths = {s["seg"]: store.seg_path(s) for s in store.segments()}
 
     earlier = store.read_signatures(spark, id_below=200)
     assert _input_dirs(earlier) == {seg_paths[0], seg_paths[1]}, "id_below must exclude later segments"
@@ -242,14 +242,14 @@ def test_foreign_hash_family_manifest_is_refused(spark, tmp_path):
 
     store = SignatureStore(str(tmp_path / "fam"))
     store.append(_bands_for(spark, 0, 10), id_min=0, id_max=9)
-    man = json.load(open(store._manifest_path()))
+    man = json.load(open(os.path.join(store.root, "_MANIFEST.json")))
     assert man["family"]  # stamped on every write
     man["family"] = "xxhash64-legacy"
-    json.dump(man, open(store._manifest_path(), "w"))
+    json.dump(man, open(os.path.join(store.root, "_MANIFEST.json"), "w"))
     with pytest.raises(ValueError, match="family"):
         store.segments()
     # empty store from an older layout: nothing to mis-join, allowed
-    json.dump({"segments": []}, open(store._manifest_path(), "w"))
+    json.dump({"segments": []}, open(os.path.join(store.root, "_MANIFEST.json"), "w"))
     assert store.segments() == []
 
 
