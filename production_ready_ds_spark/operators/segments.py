@@ -63,6 +63,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..filecache import read_parquet
 from .layout import pruned_isin, write_range_clustered
 
 #: :meth:`SegmentStore._restat` results besides a dict of entry updates:
@@ -167,7 +168,7 @@ class SegmentStore:
         """The segments' rows; with ``col``, only rows whose ``col`` is in
         ``values``, pushed by :func:`.layout.pruned_isin` with the
         manifest row total as its store-size hint."""
-        df = spark.read.parquet(*[self.seg_path(s) for s in segs])
+        df = read_parquet(spark, *[self.seg_path(s) for s in segs])
         if col is None:
             return df
         known = [s.get("rows") for s in segs]
@@ -221,7 +222,7 @@ class SegmentStore:
         merged["rows"] = self._write(self._read(spark, ripe), merged, n_files)
         for side in self.SIDECARS:
             self._write_sidecar(
-                spark.read.parquet(*[self.seg_path(s, side) for s in ripe]), merged, side
+                read_parquet(spark, *[self.seg_path(s, side) for s in ripe]), merged, side
             )
         gone = {s["seg"] for s in ripe}
         man.segments = [s for s in man.segments if s["seg"] not in gone] + [merged]
@@ -297,7 +298,7 @@ class SegmentStore:
             new["rows"] = self._write(self._read(spark, [s]).filter(kept), new, n_files)
             for side in self.SIDECARS:
                 self._write_sidecar(
-                    spark.read.parquet(self.seg_path(s, side)).filter(kept), new, side
+                    read_parquet(spark, self.seg_path(s, side)).filter(kept), new, side
                 )
             replaced[s["seg"]] = new
         self._commit(

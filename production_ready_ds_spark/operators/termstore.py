@@ -55,6 +55,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..filecache import read_parquet
 from ..functions.ranking import ranked_topk
 from .segments import DROP, KEEP, SegmentStore, overlapping
 
@@ -194,7 +195,7 @@ class TermStore(SegmentStore):
             if os.path.isdir(sidecar):  # pre-v3 stores have none to check
                 existing = [
                     c
-                    for c in docs.sparkSession.read.parquet(sidecar).columns
+                    for c in read_parquet(docs.sparkSession, sidecar).columns
                     if c not in ("doc_id", "dl")
                 ]
                 if sorted(existing) != sorted(attrs):
@@ -289,7 +290,7 @@ class TermStore(SegmentStore):
         lengths, so later searches score EXACTLY as a fresh build of the
         surviving corpus. A segment left with no document is dropped."""
         gone = (
-            spark.read.parquet(self.seg_path(seg, DOCS))
+            read_parquet(spark, self.seg_path(seg, DOCS))
             .filter(F.col("doc_id").isin(ids))
             .agg(
                 F.count(F.lit(1)).alias("n"),
@@ -427,8 +428,8 @@ class TermStore(SegmentStore):
             if not man.segments:
                 raise ValueError(f"TermStore at {self.root} is empty")
             self._require_sidecars(man.segments)
-            sidecars = spark.read.parquet(
-                *[self.seg_path(s, DOCS) for s in man.segments]
+            sidecars = read_parquet(
+                spark, *[self.seg_path(s, DOCS) for s in man.segments]
             )
             if attr not in sidecars.columns:
                 raise ValueError(

@@ -13,7 +13,9 @@ same semantics:
 - ModelExists is a pure sensor (reference O3,
   01_classification_pipeline.py:129-133): if the versioned model is
   missing the daily DAG blocks, it does NOT trigger training.
-- Classify loads the PipelineModel, scores, labels via CASE WHEN
+- Classify loads the PipelineModel (once per saved model and session,
+  ``filecache.load_model``; the reference reloads it in every
+  daily spark-submit), scores, labels via CASE WHEN
   (reference 01_classification_pipeline.py:195-198) and writes the
   day's partition ``daily/date=<iso>/`` — Hive-partition layout instead
   of the reference's date-in-path CSV (S7), so a reader of the whole
@@ -30,6 +32,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from ..filecache import load_model
 from ..functions.stemmer import stem_tokens_udf
 from ..functions.text import remove_stopwords, tokens_expr
 from ..tables import load
@@ -141,7 +144,7 @@ class ClassifyDaily(SparkTask):
         from pyspark.ml import PipelineModel
 
         sensor, clean = self.requires()
-        model = PipelineModel.load(sensor.model_path)
+        model = load_model(spark, PipelineModel.load, sensor.model_path)
         cleaned = spark.read.parquet(clean.output().path)
         scored = model.transform(cleaned)
         result = scored.select(

@@ -55,6 +55,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from ..filecache import read_parquet
 from ..operators.dedup import (
     incremental_exact_dedup,
     incremental_hamming_dedup,
@@ -127,7 +128,7 @@ class CurationIngestBatch(SparkTask):
         size = int(self.batch_size)
         lo, hi = b * size, (b + 1) * size
         root = self._root()
-        docs = spark.read.parquet(str(self.source_path))
+        docs = read_parquet(spark, str(self.source_path))
         batch_docs = docs.filter(
             (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
         )
@@ -201,7 +202,7 @@ class CurationIngestBatch(SparkTask):
 
         from ..operators.ann import bucketed_cosine_pairs
 
-        emb = spark.read.parquet(str(self.embeddings_path)).select(
+        emb = read_parquet(spark, str(self.embeddings_path)).select(
             "vec_id", "embedding"
         )
         # planes scaled by the FULL embeddings corpus — the quantizer is
@@ -350,7 +351,7 @@ class CurationCanonicals(SparkTask):
         # (round-11 review #1)
         hi = int(self.n_batches) * int(self.batch_size)
         spine = (
-            spark.read.parquet(str(self.source_path))
+            read_parquet(spark, str(self.source_path))
             .filter(F.col("doc_id") < hi)
             .select("doc_id", "n_chars")
             .join(fam, "doc_id", "left")

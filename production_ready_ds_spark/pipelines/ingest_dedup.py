@@ -38,6 +38,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from ..filecache import read_parquet
 from ..operators.dedup import minhash_bands, minhash_candidates
 from ..operators.sigstore import SignatureStore, collect_prune_keys
 from ..workflow import Parameter, ParquetTarget, SparkTask
@@ -87,7 +88,7 @@ class DedupBatch(SparkTask):
     def main(self, spark) -> None:
         b = int(self.batch)
         lo, hi = b * BATCH_SIZE, (b + 1) * BATCH_SIZE
-        docs = spark.read.parquet(str(self.source_path))
+        docs = read_parquet(spark, str(self.source_path))
         batch_docs = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
 
         fresh = minhash_bands(batch_docs)  # deterministic; checkpointed

@@ -43,6 +43,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from ..filecache import read_parquet
 from ..operators.dedup import (
     DHASH_FAMILY,
     ENVELOPE_FAMILY,
@@ -117,7 +118,7 @@ class PerceptualDedupBatch(SparkTask):
         fingerprint, family = _modality_fingerprints(str(self.modality))
         b = int(self.batch)
         lo, hi = b * PHASH_BATCH_SIZE, (b + 1) * PHASH_BATCH_SIZE
-        docs = spark.read.parquet(str(self.source_path))
+        docs = read_parquet(spark, str(self.source_path))
         batch_docs = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
 
         fp = fingerprint(batch_docs)

@@ -52,6 +52,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from ..filecache import read_parquet
 from ..operators.ann import bucketed_cosine_pairs
 from ..operators.ivfstore import IVFStore
 from ..queries.llm import EMBED_COS_THRESHOLD
@@ -108,7 +109,7 @@ class SemDedupBatch(SparkTask):
         b = int(self.batch)
         lo, hi = b * VEC_BATCH_SIZE, (b + 1) * VEC_BATCH_SIZE
         vecs = (
-            spark.read.parquet(str(self.source_path))
+            read_parquet(spark, str(self.source_path))
             .select("vec_id", "embedding")
             .filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
         )

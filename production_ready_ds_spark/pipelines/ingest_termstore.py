@@ -34,6 +34,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from ..filecache import read_parquet
 from ..operators.termstore import TermStore
 from ..workflow import Parameter, ParquetTarget, SparkTask
 
@@ -72,7 +73,7 @@ class IndexBatch(SparkTask):
 
         b = int(self.batch)
         lo, hi = b * BATCH_SIZE, (b + 1) * BATCH_SIZE
-        docs = spark.read.parquet(str(self.source_path))
+        docs = read_parquet(spark, str(self.source_path))
         batch_docs = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
 
         store = TermStore(self._store())

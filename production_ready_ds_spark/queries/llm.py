@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..filecache import load_model
 from ..functions.ranking import ranked_topk
 from ..functions.text import (
     STOPWORDS,
@@ -2088,7 +2089,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             model.write().overwrite().save(mdir)
     from pyspark.ml.classification import LogisticRegressionModel
 
-    model = LogisticRegressionModel.load(mdir)
+    model = load_model(spark, LogisticRegressionModel.load, mdir)
     scored = quality_classifier_apply(model, d)
     return scored.join(teacher, "doc_id", "left").select(
         "doc_id", "weak_keep", "score", "keep"

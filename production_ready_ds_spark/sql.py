@@ -23,9 +23,12 @@ def run_sql(spark: SparkSession, statement: str, sf_dir: str = DEFAULT_SF_DIR) -
     temp views (``region nation customer supplier part orders lineitem
     events documents embeddings``).
 
-    Views are (re)registered on every call: registration is metadata-only
-    (a logical plan per table, no scan), so the cost is negligible and
-    the views always point at the requested ``sf_dir``.
+    Views are (re)registered on every call, so they always point at the
+    requested ``sf_dir``. Registration scans no data, but the first read
+    of a table infers its parquet schema: one Spark job per table. Later
+    calls over unchanged files reuse the schemas cached by
+    :func:`.filecache.read_parquet` and launch no job before the
+    statement runs.
     """
     ensure_runtime_confs(spark)
     register_views(spark, sf_dir)

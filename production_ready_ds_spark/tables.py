@@ -6,8 +6,10 @@ the reference reads everything as untyped CSV strings, reference
 00_training_pipeline.py:129-132; we keep columnar parquet + real types).
 
 Scale notes (100 TB design):
-- All reads are plain ``spark.read.parquet`` → vectorized reader,
-  predicate pushdown and column pruning are free from Catalyst.
+- All reads go through :func:`.filecache.read_parquet` → vectorized
+  reader, predicate pushdown and column pruning from Catalyst; the
+  schema is inferred (one Spark job per table) only on the first read
+  of unchanged files, later reads reuse it and start no job.
 - ``events.ts`` is INT64 TIMESTAMP(NANOS); Spark 4 refuses it unless
   ``spark.sql.legacy.parquet.nanosAsLong=true``, after which the column
   arrives as a long of nanoseconds. We convert with integer division
@@ -22,6 +24,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .filecache import read_parquet
 
 TABLE_NAMES = (
     "region",
@@ -67,7 +71,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         _ensure_nanos_conf(spark)
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         # The shim only applies when ts physically arrives as INT64
         # nanos (the driver's testdata); an events table written with a
         # real timestamp column (test fixtures, foreign lakes) passes
@@ -81,7 +85,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
             )
         return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def spread(df: DataFrame, parts: int | None = None) -> DataFrame:

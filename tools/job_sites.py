@@ -3,9 +3,13 @@
 call site (round-12 §1 tool; guide §1.1 empirical loop).
 
 Monkeypatches the DataFrame action surface (localCheckpoint, collect,
-take, first, count, head) to stamp the job description with the first
-production_ready_ds_spark stack frame before the action fires, then
-runs the query with the noop sink and reports every job with its site.
+take, first, count, head), the schema-inferring reader
+(``DataFrameReader.parquet``) and Spark ML model loading
+(``MLReadable.load``) to stamp the job description with the first
+production_ready_ds_spark stack frame before the call fires, then runs
+the query with the noop sink and reports every job with its site. A
+read of unchanged files through ``filecache.read_parquet`` launches no
+job, so a ``parquet@...`` site names a read that infers its schema.
 
     python tools/job_sites.py q_curation_ingest
 """
@@ -43,10 +47,12 @@ def main() -> int:
     ap.add_argument("--runs", type=int, default=2)
     args = ap.parse_args()
 
+    from pyspark.ml.util import MLReadable
     from pyspark.sql import SparkSession
     from pyspark.sql.classic.dataframe import DataFrame  # Spark 4: the
     # concrete class — patching the abstract pyspark.sql.DataFrame is
     # shadowed by classic's own method definitions
+    from pyspark.sql.readwriter import DataFrameReader
 
     from production_ready_ds_spark.session import configure, register_udf_modules
 
@@ -60,19 +66,22 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     register_udf_modules()
 
-    for meth in ("localCheckpoint", "collect", "take", "first", "count", "head"):
-        orig = getattr(DataFrame, meth)
-
-        def wrapped(self, *a, _orig=orig, _meth=meth, **kw):
-            sc = self.sparkSession.sparkContext
+    def stamped(label, orig):
+        def wrapped(*a, **kw):
+            sc = spark.sparkContext
             prev = sc.getLocalProperty("spark.job.description")
-            sc.setJobDescription(f"{_meth}@{_site()}")
+            sc.setJobDescription(f"{label}@{_site()}")
             try:
-                return _orig(self, *a, **kw)
+                return orig(*a, **kw)
             finally:
                 sc.setJobDescription(prev)
 
-        setattr(DataFrame, meth, wrapped)
+        return wrapped
+
+    for meth in ("localCheckpoint", "collect", "take", "first", "count", "head"):
+        setattr(DataFrame, meth, stamped(meth, getattr(DataFrame, meth)))
+    DataFrameReader.parquet = stamped("parquet", DataFrameReader.parquet)
+    MLReadable.load = classmethod(stamped("ml.load", MLReadable.load.__func__))
 
     from production_ready_ds_spark.queries import catalog
 
