@@ -1,7 +1,7 @@
 """Serve metadata read earlier again while its files have not changed.
 
 Two driver-side reads repeat on every request although their inputs
-rarely change:
+rarely change, and some derived state is costly to rebuild:
 
 - A ``spark.read.parquet`` without a schema starts one Spark job that
   opens file footers to infer the schema. :func:`read_parquet` infers
@@ -10,6 +10,9 @@ rarely change:
 - Loading a saved Spark ML model starts several jobs (metadata and
   stage reads). :func:`load_model` keeps the loaded model while its
   directory and the SparkContext stay the same.
+- Indexes, models and staged copies built from the corpus persist under
+  the temp dir. :func:`derived_dir` names their directory after the
+  fingerprints of the files they derive from and serializes builders.
 
 In the reference each task is its own ``spark-submit``, so nothing
 could outlive a task (reference ``01_classification_pipeline.py``
@@ -29,11 +32,15 @@ patterns) always take the plain read.
 
 from __future__ import annotations
 
+import fcntl
+import hashlib
 import os
 import stat
+import tempfile
 import threading
 from collections import OrderedDict
-from typing import Callable, TypeVar
+from contextlib import contextmanager
+from typing import Callable, Iterator, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -147,3 +154,23 @@ def load_model(spark: SparkSession, loader: Callable[[str], M], path: str) -> M:
     with _lock:
         _models[path] = (key, model)
     return model
+
+
+@contextmanager
+def derived_dir(name: str, recipe, *sources: str) -> Iterator[str]:
+    """The temp directory for state built from ``sources`` by ``recipe``,
+    held under an exclusive ``flock`` on ``<dir>.lock`` for the block.
+
+    The directory name hashes ``recipe`` and the :func:`fingerprint` of
+    every source, so a rewritten source or a changed recipe gets a fresh
+    directory and stale state is never served. The lock serializes
+    builders of the same directory across threads and processes (each
+    entry opens the lock file anew); a caller checks for a finished
+    build inside the block. The directory itself is not created."""
+    key = repr((recipe, [fingerprint(s) for s in sources]))
+    root = os.path.join(
+        tempfile.gettempdir(), f"{name}_{hashlib.md5(key.encode()).hexdigest()[:16]}"
+    )
+    with open(root + ".lock", "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        yield root  # closing the file releases the lock

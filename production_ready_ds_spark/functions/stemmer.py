@@ -1,157 +1,16 @@
-"""Pure-Python Porter stemmer + Arrow-batched pandas UDF wrapper.
+"""Arrow-batched pandas UDF that stems token arrays.
 
 The reference stems tokens with NLTK's SnowballStemmer (T5,
 00_training_pipeline.py:61,88) — the single cleaning step with no Spark
-builtin. NLTK is not installable here, so this is an independent
-implementation of the classic Porter algorithm (M.F. Porter, 1980, "An
-algorithm for suffix stripping" — public domain algorithm); Snowball is
-its refinement and agrees on the vast majority of English tokens.
-
-Used via ``stem_tokens_udf`` — an Arrow-batched pandas UDF over
+builtin. NLTK is not installable here, so the stemming itself is
+:func:`.snowball.snowball_stem`, an English Snowball (Porter2)
+implementation from the public spec; this module wraps it as
+``stem_tokens_udf`` — an Arrow-batched pandas UDF over
 ``array<string>`` columns (the ~100× faster path vs row-at-a-time
 Python; SURVEY.md §2a U1 disposition).
 """
 
 from __future__ import annotations
-
-import re
-
-_VOWELS = set("aeiou")
-
-
-def _is_consonant(word: str, i: int) -> bool:
-    ch = word[i]
-    if ch in _VOWELS:
-        return False
-    if ch == "y":
-        return i == 0 or not _is_consonant(word, i - 1)
-    return True
-
-
-def _measure(stem: str) -> int:
-    """The Porter 'measure' m: number of VC sequences in C?(VC){m}V?."""
-    forms = "".join("c" if _is_consonant(stem, i) else "v" for i in range(len(stem)))
-    return len(re.findall("vc", forms))
-
-
-def _has_vowel(stem: str) -> bool:
-    return any(not _is_consonant(stem, i) for i in range(len(stem)))
-
-
-def _ends_double_consonant(word: str) -> bool:
-    return (
-        len(word) >= 2
-        and word[-1] == word[-2]
-        and _is_consonant(word, len(word) - 1)
-    )
-
-
-def _cvc(word: str) -> bool:
-    if len(word) < 3:
-        return False
-    return (
-        _is_consonant(word, len(word) - 3)
-        and not _is_consonant(word, len(word) - 2)
-        and _is_consonant(word, len(word) - 1)
-        and word[-1] not in "wxy"
-    )
-
-
-_STEP2 = (
-    ("ational", "ate"), ("tional", "tion"), ("enci", "ence"), ("anci", "ance"),
-    ("izer", "ize"), ("abli", "able"), ("alli", "al"), ("entli", "ent"),
-    ("eli", "e"), ("ousli", "ous"), ("ization", "ize"), ("ation", "ate"),
-    ("ator", "ate"), ("alism", "al"), ("iveness", "ive"), ("fulness", "ful"),
-    ("ousness", "ous"), ("aliti", "al"), ("iviti", "ive"), ("biliti", "ble"),
-)
-
-_STEP3 = (
-    ("icate", "ic"), ("ative", ""), ("alize", "al"), ("iciti", "ic"),
-    ("ical", "ic"), ("ful", ""), ("ness", ""),
-)
-
-_STEP4 = (
-    "al", "ance", "ence", "er", "ic", "able", "ible", "ant", "ement",
-    "ment", "ent", "ion", "ou", "ism", "ate", "iti", "ous", "ive", "ize",
-)
-
-
-def porter_stem(word: str) -> str:
-    """Stem one lowercase token."""
-    w = word
-    if len(w) <= 2:
-        return w
-
-    # step 1a
-    if w.endswith("sses"):
-        w = w[:-2]
-    elif w.endswith("ies"):
-        w = w[:-2]
-    elif w.endswith("ss"):
-        pass
-    elif w.endswith("s"):
-        w = w[:-1]
-
-    # step 1b
-    if w.endswith("eed"):
-        if _measure(w[:-3]) > 0:
-            w = w[:-1]
-    else:
-        flag = False
-        if w.endswith("ed") and _has_vowel(w[:-2]):
-            w, flag = w[:-2], True
-        elif w.endswith("ing") and _has_vowel(w[:-3]):
-            w, flag = w[:-3], True
-        if flag:
-            if w.endswith(("at", "bl", "iz")):
-                w += "e"
-            elif _ends_double_consonant(w) and not w.endswith(("l", "s", "z")):
-                w = w[:-1]
-            elif _measure(w) == 1 and _cvc(w):
-                w += "e"
-
-    # step 1c
-    if w.endswith("y") and _has_vowel(w[:-1]):
-        w = w[:-1] + "i"
-
-    # step 2
-    for suffix, repl in _STEP2:
-        if w.endswith(suffix):
-            stem = w[: -len(suffix)]
-            if _measure(stem) > 0:
-                w = stem + repl
-            break
-
-    # step 3
-    for suffix, repl in _STEP3:
-        if w.endswith(suffix):
-            stem = w[: -len(suffix)]
-            if _measure(stem) > 0:
-                w = stem + repl
-            break
-
-    # step 4
-    for suffix in _STEP4:
-        if w.endswith(suffix):
-            stem = w[: -len(suffix)]
-            if suffix == "ion" and not stem.endswith(("s", "t")):
-                continue
-            if _measure(stem) > 1:
-                w = stem
-            break
-
-    # step 5a
-    if w.endswith("e"):
-        stem = w[:-1]
-        m = _measure(stem)
-        if m > 1 or (m == 1 and not _cvc(stem)):
-            w = stem
-
-    # step 5b
-    if _measure(w) > 1 and _ends_double_consonant(w) and w.endswith("l"):
-        w = w[:-1]
-
-    return w
 
 
 def stem_tokens_udf():
@@ -160,8 +19,7 @@ def stem_tokens_udf():
 
     Uses the English Snowball (Porter2) stemmer — the algorithm the
     reference stems with — so the golden-artifact replay is exact
-    (tests/test_reference_replay.py). ``porter_stem`` above is the
-    classic Porter predecessor, kept for comparison/property tests."""
+    (tests/test_reference_replay.py)."""
     from pyspark.sql.functions import pandas_udf
 
     from .snowball import snowball_stem

@@ -31,8 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..filecache import derived_dir
 from ..functions.text import md5_prefix_int
-from ..tables import load
+from ..tables import load, table_path
 from . import query
 
 #: one oracle for every format twin — the aggregate is over the
@@ -64,10 +65,10 @@ def _roundtrip_agg(df: DataFrame) -> DataFrame:
     )
 
 
-def _staging_dir(sf_dir: str, fmt: str) -> str:
-    from .llm import _corpus_cache_dir
-
-    return _corpus_cache_dir(f"prds_fmt_{fmt}", sf_dir, "documents", 1)
+def _staging_dir(sf_dir: str, fmt: str):
+    """The locked documents-keyed staging :func:`.filecache.derived_dir`
+    of one format round trip."""
+    return derived_dir(f"prds_fmt_{fmt}", 1, table_path(sf_dir, "documents"))
 
 
 @query("q_xml_roundtrip", category="sources", sql=_ROUNDTRIP_SQL)
@@ -77,10 +78,8 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus. XML is the round-trip most worth gating: &, <, > in text
     must survive escape/unescape exactly."""
     from ..sources.xml import read_xml, write_xml
-    from .llm import _build_lock
 
-    out = _staging_dir(sf_dir, "xml")
-    with _build_lock(out):
+    with _staging_dir(sf_dir, "xml") as out:
         write_xml(load(spark, sf_dir, "documents"), out)
     return _roundtrip_agg(read_xml(spark, out, _DOCS_SCHEMA))
 
@@ -91,10 +90,8 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum aggregate; unicode escapes and gzip framing under the
     hash gate."""
     from ..sources.jsonl import read_jsonl, write_jsonl
-    from .llm import _build_lock
 
-    out = _staging_dir(sf_dir, "jsonl")
-    with _build_lock(out):
+    with _staging_dir(sf_dir, "jsonl") as out:
         write_jsonl(load(spark, sf_dir, "documents"), out, compress=True)
     return _roundtrip_agg(read_jsonl(spark, out, _DOCS_SCHEMA))
 
@@ -104,10 +101,8 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents → ORC (native vectorized reader) → read back →
     checksum aggregate; type mapping fidelity under the hash gate."""
     from ..sources.orc import read_orc, write_orc
-    from .llm import _build_lock
 
-    out = _staging_dir(sf_dir, "orc")
-    with _build_lock(out):
+    with _staging_dir(sf_dir, "orc") as out:
         write_orc(load(spark, sf_dir, "documents"), out)
     return _roundtrip_agg(read_orc(spark, out))
 
@@ -146,10 +141,8 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole table (operators/layout.py docstring carries the
     single-writer/table-format contract)."""
     from ..operators.layout import compact_parquet
-    from .llm import _build_lock
 
-    out = _staging_dir(sf_dir, "compact")
-    with _build_lock(out):
+    with _staging_dir(sf_dir, "compact") as out:
         (
             load(spark, sf_dir, "documents")
             .repartition(64)
@@ -207,14 +200,12 @@ def q_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta/Iceberg MERGE executes, with the documented
     single-writer/partition-pinned-rows contract in upsert.py."""
     from ..operators.upsert import upsert_parquet
-    from .llm import _build_lock, _corpus_cache_dir
 
     cols = ["c_custkey", "c_mktsegment", "c_acctbal"]
     cust = load(spark, sf_dir, "customer").select(*cols)
-    # keyed off the CUSTOMER manifest — _staging_dir hashes documents,
+    # keyed off the CUSTOMER table — _staging_dir keys on documents,
     # the wrong source table for this query (the q_stream_scd2 key)
-    out = _corpus_cache_dir("prds_fmt_upsert", sf_dir, "customer", 1)
-    with _build_lock(out):
+    with derived_dir("prds_fmt_upsert", 1, table_path(sf_dir, "customer")) as out:
         import shutil
 
         shutil.rmtree(out, ignore_errors=True)  # fresh seed every run

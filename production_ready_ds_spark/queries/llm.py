@@ -11,13 +11,12 @@ LSH band / label bucket, and brute-force cosine is only on the
 from __future__ import annotations
 
 import re
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from ..filecache import load_model
+from ..filecache import derived_dir, load_model
 from ..functions.ranking import ranked_topk
 from ..functions.text import (
     STOPWORDS,
@@ -51,7 +50,7 @@ from ..operators.dedup import (
     jaccard_pairs,
     shingled_docs,
 )
-from ..tables import load
+from ..tables import load, table_path
 from . import query
 
 #: the faceted-search restriction (q_search_faceted pair and the
@@ -1208,15 +1207,13 @@ def q_sim_topk_filtered_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("vec_id"), FACET_ATTR)
     )
-    store = IVFStore(
-        _corpus_cache_dir(
-            "prds_ivf_facet",
-            sf_dir,
-            "embeddings",
-            ("v1", _corpus_cache_dir("prds_ivf_facet_docs", sf_dir, "documents", 1)),
-        )
-    )
-    with _build_lock(store.root):
+    with derived_dir(
+        "prds_ivf_facet",
+        "v1",
+        table_path(sf_dir, "embeddings"),
+        table_path(sf_dir, "documents"),
+    ) as root:
+        store = IVFStore(root)
         if store.centroids() is None or not store.segments():
             store.train(e)
             store.append(
@@ -1395,16 +1392,8 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample (KMeans cost is per-training-row), assignment is one
     matmul map pass at ingest, and every query pays only
     |probes| · nprobe list reads."""
-    from ..operators.ivfstore import IVFStore
-
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    store = IVFStore(
-        _corpus_cache_dir("prds_ivf_recall", sf_dir, "embeddings", 1)
-    )
-    with _build_lock(store.root):
-        if store.centroids() is None or not store.segments():
-            store.train(e)
-            store.append(e, id_min=0, id_max=2**62, skip_if_range_indexed=True)
+    store = _cached_ivf_store(e, sf_dir)
     probes = e.filter(F.col("vec_id") < 10)
     return store.search(probes, top_k=3, nprobe=len(store.centroids()))
 
@@ -1735,16 +1724,8 @@ def q_dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver (centroids depend on the trainer); the within-cluster
     decisions are replayed exactly by a NumPy brute force in
     tests/test_llm_ops.py, the q_dedup_semantic evidence form."""
-    from ..operators.ivfstore import IVFStore
-
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    store = IVFStore(
-        _corpus_cache_dir("prds_ivf_recall", sf_dir, "embeddings", 1)
-    )
-    with _build_lock(store.root):
-        if store.centroids() is None or not store.segments():
-            store.train(e)
-            store.append(e, id_min=0, id_max=2**62, skip_if_range_indexed=True)
+    store = _cached_ivf_store(e, sf_dir)
     assigned = store.assign(e).withColumnRenamed("list_id", "bucket")
     return _semantic_decisions(assigned)
 
@@ -2078,10 +2059,8 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         # degenerate teacher: no evidence, no model — same keep-all
         # path as the builder (nothing worth caching)
         return quality_classifier_scores(d, None)
-    cache_root = _corpus_cache_dir("prds_qclf", sf_dir, "documents", 1)
-    os.makedirs(cache_root, exist_ok=True)
-    mdir = os.path.join(cache_root, "model")
-    with _build_lock(mdir):
+    with derived_dir("prds_qclf", 1, table_path(sf_dir, "documents")) as root:
+        mdir = os.path.join(root, "model")
         if not os.path.exists(os.path.join(mdir, "metadata")):
             model = quality_classifier_fit(d, teacher)
             if model is None:
@@ -5468,12 +5447,12 @@ def _cached_stemmed_index(spark: SparkSession, sf_dir: str):
     from ..functions.stemmer import stem_tokens_udf
     from ..operators.termstore import STORE_VERSION, TermStore
 
-    store = TermStore(
-        _corpus_cache_dir(
-            "prds_termstore_stem", sf_dir, "documents", (STORE_VERSION, "snowball")
-        )
-    )
-    with _build_lock(store.root):
+    with derived_dir(
+        "prds_termstore_stem",
+        (STORE_VERSION, "snowball"),
+        table_path(sf_dir, "documents"),
+    ) as root:
+        store = TermStore(root)
         if not store.segments():
             stem = stem_tokens_udf()
             store.append(
@@ -5514,27 +5493,21 @@ def _cached_corpus_index(spark: SparkSession, sf_dir: str):
     in the key means a tokenizer/postings/scoring change never
     re-serves a stale index; a fresh corpus gets a fresh directory.
 
-    The key hashes a recursive (relpath, size, mtime_ns) manifest of
-    the corpus, not one mtime: a corpus COPIED with preserved
-    timestamps still re-keys when any part file's name or size
-    differs (the one residual blind spot — same-size same-mtime
-    content swaps — would need a full content read, which would cost
-    more than the index build it guards). Concurrent first-builds are
-    SERIALIZED with an exclusive flock on a sibling lockfile:
-    TermStore is single-writer, and two processes racing the seg=0
-    write + manifest replace would corrupt the store; after the lock,
-    skip_if_range_indexed makes the loser's append a no-op."""
+    The directory is a :func:`.filecache.derived_dir`: keyed on the
+    corpus files' fingerprints, so any rewrite re-keys, and holding
+    its lock while building. TermStore is single-writer, and two
+    processes racing the seg=0 write + manifest replace would corrupt
+    the store; after the lock, skip_if_range_indexed makes the loser's
+    append a no-op."""
     from ..operators.termstore import STORE_VERSION, TermStore
 
     # key on the BUILD RECIPE (version + attrs), not the layout version
     # alone: an attrs change at the same STORE_VERSION must never
     # re-serve an attr-less store (the round-7 q_stream_faceted lesson)
-    store = TermStore(
-        _corpus_cache_dir(
-            "prds_termstore", sf_dir, "documents", (STORE_VERSION, FACET_ATTR)
-        )
-    )
-    with _build_lock(store.root):
+    with derived_dir(
+        "prds_termstore", (STORE_VERSION, FACET_ATTR), table_path(sf_dir, "documents")
+    ) as root:
+        store = TermStore(root)
         store.append(
             load(spark, sf_dir, "documents"),
             id_min=0,
@@ -5545,53 +5518,6 @@ def _cached_corpus_index(spark: SparkSession, sf_dir: str):
             attrs=(FACET_ATTR,),
         )
     return store
-
-
-def _corpus_cache_dir(prefix: str, sf_dir: str, table: str, version) -> str:
-    """Shared /tmp cache-key convention for corpus-derived persistent
-    state (the TermStore AND IVFStore caches): the key hashes
-    (abspath, recursive (relpath, size, mtime_ns) manifest of the
-    source table, version), so a REGENERATED corpus at the same path —
-    or a version bump of the derived layout — always gets a fresh
-    directory instead of silently re-serving stale state."""
-    import hashlib
-    import os
-    import tempfile
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
-
-    def stat_sig(path: str) -> list[tuple[str, int, int]]:
-        if os.path.isfile(path):
-            st = os.stat(path)
-            return [("", st.st_size, st.st_mtime_ns)]
-        out: list[tuple[str, int, int]] = []
-        for base, _dirs, files in os.walk(path):
-            for name in files:
-                p = os.path.join(base, name)
-                st = os.stat(p)
-                out.append((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
-        return sorted(out)
-
-    sig = stat_sig(src) if os.path.exists(src) else []
-    key = hashlib.md5(
-        repr((os.path.abspath(sf_dir), sig, version)).encode()
-    ).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"{prefix}_{key}")
-
-
-@contextmanager
-def _build_lock(root: str):
-    """Exclusive flock on a sibling lockfile — serializes concurrent
-    first-builds of a shared single-writer /tmp store; after the lock
-    the store's own idempotence guard makes the loser a no-op."""
-    import fcntl
-
-    with open(root + ".lock", "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        try:
-            yield
-        finally:
-            fcntl.flock(lk, fcntl.LOCK_UN)
 
 
 @query(
@@ -6132,20 +6058,8 @@ def q_ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force-equality properties."""
     from pyspark.sql import Window
 
-    from ..operators.ivfstore import IVFStore
-
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # same staleness + single-writer discipline as the TermStore cache:
-    # the key re-derives from the corpus stat manifest (a regenerated
-    # corpus at the same path never re-serves old centroids/segments),
-    # and the first build is flock-serialized
-    store = IVFStore(
-        _corpus_cache_dir("prds_ivf_recall", sf_dir, "embeddings", 1)
-    )
-    with _build_lock(store.root):
-        if store.centroids() is None or not store.segments():
-            store.train(e)
-            store.append(e, id_min=0, id_max=2**62, skip_if_range_indexed=True)
+    store = _cached_ivf_store(e, sf_dir)
     k_lists = len(store.centroids())
     from ..functions.vectors import scaled_ivf_k
     from ..operators.ivfstore import DEFAULT_K
@@ -6282,16 +6196,15 @@ def q_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cached_pq_codec(e: DataFrame, sf_dir: str):
     """The ONE load-or-train-under-lock block for the per-corpus PQ
-    codebook cache (the _cached_corpus_index convention) — shared by
+    codebook cache (a :func:`.filecache.derived_dir`) — shared by
     q_sim_topk_pq and q_ann_recall_pq, which read the SAME cache file
     and therefore must stay byte-equivalent on how it is built."""
     import os
 
     from ..operators.pq import PQCodec
 
-    root = _corpus_cache_dir("prds_pq", sf_dir, "embeddings", 1)
-    path = os.path.join(root, "codebooks.json")
-    with _build_lock(root):
+    with derived_dir("prds_pq", 1, table_path(sf_dir, "embeddings")) as root:
+        path = os.path.join(root, "codebooks.json")
         if os.path.exists(path):
             return PQCodec.load(path)
         codec = PQCodec.train(e)
@@ -6442,19 +6355,34 @@ def q_ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cached_ivf_store(e: DataFrame, sf_dir: str):
+    """Load-or-build-under-lock for the per-corpus IVF store (KMeans
+    centroids + one full-corpus segment, no codes) that
+    q_ann_recall_ivf, q_sim_topk_ivf and q_dedup_semantic_ivf share:
+    the corpus is trained once, never per call."""
+    from ..operators.ivfstore import IVFStore
+
+    with derived_dir("prds_ivf_recall", 1, table_path(sf_dir, "embeddings")) as root:
+        store = IVFStore(root)
+        if store.centroids() is None or not store.segments():
+            store.train(e)
+            store.append(e, id_min=0, id_max=2**62, skip_if_range_indexed=True)
+    return store
+
+
 def _cached_ivfpq_store(e: DataFrame, sf_dir: str):
     """Load-or-build-under-lock for the per-corpus composed IVFPQ
-    store (the _corpus_cache_dir convention): KMeans centroids + PQ
+    store (a :func:`.filecache.derived_dir`): KMeans centroids + PQ
     RESIDUAL codebooks (IVFADC) trained BEFORE the first append
     (train_pq's ordering contract — every segment row carries its m
     code bytes), one full-corpus segment. Shared by q_sim_topk_ivfpq and
     q_ann_recall_ivfpq, which must read the same store. A separate
-    cache root from prds_ivf_recall: that store's segments were
-    written codeless."""
+    cache root from :func:`_cached_ivf_store`: that store's segments
+    were written codeless."""
     from ..operators.ivfstore import IVFStore
 
-    store = IVFStore(_corpus_cache_dir("prds_ivfpq", sf_dir, "embeddings", 2))
-    with _build_lock(store.root):
+    with derived_dir("prds_ivfpq", 2, table_path(sf_dir, "embeddings")) as root:
+        store = IVFStore(root)
         if store.centroids() is None or not store.segments():
             store.train(e)
             # residual=True is the IVFADC form (Jégou et al. §IV;

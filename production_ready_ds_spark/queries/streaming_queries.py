@@ -386,26 +386,28 @@ def _stream_built_termstore(spark: SparkSession, sf_dir: str):
     import os
     import shutil
 
+    from ..filecache import derived_dir, read_parquet
     from ..operators.termstore import DOCS, STORE_VERSION, TermStore
     from ..streaming.events import _as_stream_dir
-    from ..tables import load
-    from .llm import FACET_ATTR, _build_lock, _corpus_cache_dir
+    from ..tables import load, table_path
+    from .llm import FACET_ATTR
 
+    expected = load(spark, sf_dir, "documents").count()
     # the cache key carries the ingest RECIPE (attrs), not just the
     # store layout version: a store built by an older recipe at the
     # same STORE_VERSION must never be re-served (a doc-count-complete
     # but attr-less store would fail search_filtered)
-    root = _corpus_cache_dir(
-        "prds_stream_index", sf_dir, "documents", (STORE_VERSION, FACET_ATTR)
-    )
-    expected = load(spark, sf_dir, "documents").count()
-    with _build_lock(root):
+    with derived_dir(
+        "prds_stream_index",
+        (STORE_VERSION, FACET_ATTR),
+        table_path(sf_dir, "documents"),
+    ) as root:
         done = TermStore(root)
         try:
             segs = done.segments()
             if segs and done.stats()[0] == expected:
-                sidecar_cols = spark.read.parquet(
-                    done.seg_path(segs[0], DOCS)
+                sidecar_cols = read_parquet(
+                    spark, done.seg_path(segs[0], DOCS)
                 ).columns
                 if FACET_ATTR in sidecar_cols:  # complete AND current recipe
                     return done
@@ -567,15 +569,14 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
+    from ..filecache import derived_dir
     from ..operators.layout import _swap_into
     from ..operators.scd2 import VALID_FROM, VALID_TO, scd2_merge
-    from ..tables import load
-    from .llm import _build_lock, _corpus_cache_dir
+    from ..tables import load, table_path
 
     cols = ["c_custkey", "c_mktsegment"]
-    root = _corpus_cache_dir("prds_stream_scd2", sf_dir, "customer", 1)
-    hist_dir = os.path.join(root, "hist")
-    with _build_lock(root):
+    with derived_dir("prds_stream_scd2", 1, table_path(sf_dir, "customer")) as root:
+        hist_dir = os.path.join(root, "hist")
         shutil.rmtree(root, ignore_errors=True)
         os.makedirs(root)
         cust = load(spark, sf_dir, "customer").select(*cols)

@@ -60,6 +60,10 @@ def _ensure_nanos_conf(spark: SparkSession) -> None:
             pass
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one registry table as a typed DataFrame.
 
@@ -68,7 +72,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = table_path(sf_dir, name)
     if name == "events":
         _ensure_nanos_conf(spark)
         df = read_parquet(spark, path)

@@ -1,13 +1,18 @@
 """filecache: a cached parquet schema or Spark ML model is served only
 while the files it came from are unchanged, and a read served from the
 cache equals the plain read. The job-count tests pin the point of the
-cache: unchanged inputs launch no schema-inference or model-load job."""
+cache: unchanged inputs launch no schema-inference or model-load job.
+A derived directory is re-keyed by exactly the changes that re-key the
+schema cache, and its builders run one at a time."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
 import shutil
+import tempfile
+import threading
+import time
 import uuid
 from contextlib import contextmanager
 from types import SimpleNamespace
@@ -223,3 +228,80 @@ def test_load_model_keys_on_the_spark_context(spark, sf_small, tmp_path):
     restarted = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="local-restarted"))
     assert filecache.load_model(restarted, loader, path) is not first
     assert len(calls) == 2
+
+
+@pytest.fixture
+def derived(tmp_path, monkeypatch):
+    """``derived(recipe, *sources)`` → the directory derived_dir yields,
+    under a private temp dir."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+
+    def root(recipe, *sources):
+        with filecache.derived_dir("t", recipe, *sources) as d:
+            return d
+
+    return root
+
+
+def _table(path, payload=b"x"):
+    path.mkdir(parents=True, exist_ok=True)
+    (path / "part-0.parquet").write_bytes(payload)
+    return str(path)
+
+
+def test_derived_dir_is_stable_while_data_files_are_unchanged(derived, tmp_path):
+    src = _table(tmp_path / "documents.parquet")
+    first = derived(1, src)
+    assert derived(1, src) == first
+    assert os.path.dirname(first) == tempfile.gettempdir()
+    for name in ("_SUCCESS", ".part-0.parquet.crc"):  # Spark's side files
+        (tmp_path / "documents.parquet" / name).write_bytes(b"")
+    assert derived(1, src) == first
+
+
+def test_derived_dir_rekeys_on_a_rewritten_source(derived, tmp_path):
+    src = _table(tmp_path / "documents.parquet")
+    first = derived(1, src)
+    part = tmp_path / "documents.parquet" / "part-0.parquet"
+    os.utime(part, ns=(0, part.stat().st_mtime_ns + 1))  # same size, new mtime
+    touched = derived(1, src)
+    assert touched != first
+    _table(tmp_path / "documents.parquet", b"xy")  # new size
+    assert derived(1, src) not in (first, touched)
+
+
+def test_derived_dir_rekeys_on_a_new_recipe(derived, tmp_path):
+    src = _table(tmp_path / "documents.parquet")
+    assert derived((1, "a"), src) != derived((1, "b"), src)
+
+
+def test_derived_dir_rekeys_when_only_the_second_source_changes(derived, tmp_path):
+    emb = _table(tmp_path / "embeddings.parquet")
+    docs = _table(tmp_path / "documents.parquet")
+    first = derived(1, emb, docs)
+    _table(tmp_path / "documents.parquet", b"xy")
+    assert derived(1, emb, docs) != first
+
+
+def test_derived_dir_serializes_builders(derived, tmp_path):
+    src = _table(tmp_path / "documents.parquet")
+    builds: list[str] = []
+    start = threading.Barrier(4)
+
+    def build():
+        start.wait(timeout=30)
+        with filecache.derived_dir("t", 1, src) as root:
+            if not os.path.exists(root):  # the "already built?" test
+                time.sleep(0.05)  # a build long enough for a race to show
+                builds.append(root)
+                os.makedirs(root)
+
+    threads = [threading.Thread(target=build) for _ in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+    assert not any(t.is_alive() for t in threads)
+    assert builds == [derived(1, src)]

@@ -11,7 +11,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from production_ready_ds_spark.functions.stemmer import porter_stem
+from production_ready_ds_spark.functions.snowball import snowball_stem
 
 words = st.text(alphabet="abcdefghijklmnopqrstuvwxyz", min_size=1, max_size=20)
 
@@ -19,7 +19,7 @@ words = st.text(alphabet="abcdefghijklmnopqrstuvwxyz", min_size=1, max_size=20)
 @given(words)
 @settings(max_examples=300, deadline=None)
 def test_stemmer_never_grows_and_stays_lower(w):
-    s = porter_stem(w)
+    s = snowball_stem(w)
     assert len(s) <= len(w) + 1  # +1: step-1b can append 'e'
     assert s == s.lower()
 
@@ -27,7 +27,7 @@ def test_stemmer_never_grows_and_stays_lower(w):
 @given(words)
 @settings(max_examples=300, deadline=None)
 def test_stemmer_deterministic(w):
-    assert porter_stem(w) == porter_stem(w)
+    assert snowball_stem(w) == snowball_stem(w)
 
 
 @given(st.lists(words, min_size=0, max_size=30))

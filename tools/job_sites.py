@@ -99,7 +99,7 @@ def main() -> int:
             df.write.mode("overwrite").format("noop").save()
             sc.setJobDescription(None)
             wall = time.perf_counter() - t0
-        # last run reported
+        # last run reported: the jobs numbered from its start on
         data = json.load(
             urllib.request.urlopen("http://localhost:4052/api/v1/applications")
         )
@@ -109,33 +109,20 @@ def main() -> int:
                 f"http://localhost:4052/api/v1/applications/{app_id}/jobs?status=succeeded"
             )
         )
-        tag = f"{name}#r{args.runs - 1}"
-        mine = [
-            j
-            for j in jobs
-            if (j.get("description") or "").startswith(tag)
-            or (j.get("jobGroup") or "") == tag
+        rows = [
+            {
+                "jobId": j["jobId"],
+                "desc": (j.get("description") or "")[:90],
+                "ms": _dur_ms(j),
+                "tasks": j.get("numTasks"),
+            }
+            for j in sorted(jobs, key=lambda j: j["jobId"])
+            if j["jobId"] >= before
         ]
-        # jobs stamped by the action wrapper carry the action site, not
-        # the query tag — take every job newer than the run boundary
-        allj = sorted(jobs, key=lambda j: j["jobId"])
-        # fall back: report the trailing wall-clock window
-        t_cut = None
-        rows = []
-        total_ms = 0
-        for j in allj:
-            sub = j["submissionTime"]
-            rows.append(
-                {
-                    "jobId": j["jobId"],
-                    "desc": (j.get("description") or "")[:90],
-                    "ms": _dur_ms(j),
-                    "tasks": j.get("numTasks"),
-                }
-            )
-            total_ms += _dur_ms(j)
         report[name] = {"wall_last_run_s": round(wall, 3), "jobs": rows}
-        print(f"== {name}: last-run wall {wall:.3f}s, {len(rows)} session jobs total")
+        print(f"== {name}: last-run wall {wall:.3f}s, {len(rows)} jobs")
+        for row in rows:
+            print(f"   {row['jobId']:>5} {row['ms']:>7} ms  {row['desc']}")
     with open("/tmp/job_sites.json", "w") as f:
         json.dump(report, f, indent=1)
     print("written: /tmp/job_sites.json")
@@ -146,7 +133,6 @@ def main() -> int:
 def _dur_ms(j) -> int:
     from datetime import datetime
 
-    fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
     try:
         a = datetime.strptime(j["submissionTime"].replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f")
         b = datetime.strptime(j["completionTime"].replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f")
