@@ -17,6 +17,20 @@ text-classification workflow; see SURVEY.md), re-expressed Spark-first:
                   Tasks, completeness pruning, date ranges, sensors);
                   Luigi itself is not installable in this environment.
 - ``pipelines`` — reference-parity training + daily classification DAGs.
+
+Importing the package registers it, with every submodule, for cloudpickle
+pickle-by-value: UDF, UDTF, data-source and mapInPandas bodies ship their
+code inside the serialized task, so Python workers never need to import
+``production_ready_ds_spark`` (a driver started outside the repo, or a
+cluster without the package deployed). A worker body must still capture
+what it uses from module scope: a ``from ..x import y`` inside the body
+runs on the worker and needs the package there.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -127,7 +127,7 @@ def run_compare(spark, name: str, sf_dir: str) -> CompareResult:
     from .queries import catalog
     from .session import ensure_runtime_confs
 
-    ensure_runtime_confs(spark)  # nanos shim, UTC, by-value UDF pickling
+    ensure_runtime_confs(spark)  # nanos shim, UTC
 
     q = catalog()[name]
     spark_pdf = q.fn(spark, sf_dir).toPandas()

@@ -368,23 +368,3 @@ class CurationCanonicals(SparkTask):
             "family_id",
             (F.row_number().over(w) == 1).alias("keep_best"),
         ).write.mode("overwrite").parquet(self.output().path)
-
-
-def curation_ingest_dag(
-    data_root: str,
-    source_path: str,
-    embeddings_path: str,
-    *,
-    n_batches: int,
-    modality: str = "image",
-    batch_size: int = CURATION_BATCH_SIZE,
-) -> CurationCanonicals:
-    """The composed DAG rooted at its canonical view."""
-    return CurationCanonicals(
-        data_root=data_root,
-        source_path=source_path,
-        embeddings_path=embeddings_path,
-        n_batches=n_batches,
-        modality=modality,
-        batch_size=batch_size,
-    )

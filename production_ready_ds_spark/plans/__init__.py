@@ -8,7 +8,6 @@ from .audit import (
     pushed_filters,
     read_schema_columns,
     shuffle_count,
-    whole_stage_codegen_ids,
 )
 
 __all__ = [
@@ -19,5 +18,4 @@ __all__ = [
     "pushed_filters",
     "read_schema_columns",
     "shuffle_count",
-    "whole_stage_codegen_ids",
 ]

@@ -100,9 +100,3 @@ def exchange_input_columns(df: DataFrame) -> list[list[str]]:
             cols = [c.strip().split("#")[0] for c in m.group(1).split(",") if c.strip()]
             out.append(cols)
     return out
-
-
-def whole_stage_codegen_ids(df: DataFrame) -> set[int]:
-    """Distinct WholeStageCodegen stage ids (wider = more operators
-    fused into JVM-generated loops)."""
-    return {int(m) for m in re.findall(r"WholeStageCodegen \((\d+)\)", explain_str(df))}

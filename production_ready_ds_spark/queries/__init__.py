@@ -74,35 +74,9 @@ def query(
         _REGISTRY[name] = Query(
             name=name, fn=fn, sql=sql, category=category, doc=fn.__doc__ or "", bench=bench, tags=tags
         )
-        _register_defining_module_by_value(fn.__module__)
         return fn
 
     return wrap
-
-
-def _register_defining_module_by_value(module_name: str) -> None:
-    """Cloudpickle-register the query's defining module BY VALUE the
-    moment its first @query decorator runs (round-8 verdict item 6).
-    This closes the one registration gap session.register_udf_modules
-    documents: a query submodule hand-imported DIRECTLY (bypassing
-    catalog()) on a session that was built earlier from a foreign cwd
-    would otherwise pickle its kernels by module reference, and
-    foreign-cwd Python workers die on ModuleNotFoundError. Decoration
-    time is import time, so the hook is structural — any import path
-    that makes a query callable has already registered its module.
-    Registration is a set-insert (no pickling happens until a kernel
-    ships), so the get_spark() fast path stays fast."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    mod = sys.modules.get(module_name)
-    if mod is None:  # pragma: no cover - defensive: exec outside import
-        return
-    try:
-        cloudpickle.register_pickle_by_value(mod)
-    except Exception:  # pragma: no cover - already registered / old API
-        pass
 
 
 # SURVEY.md §2b declared contract queries, in the survey's own order.
@@ -417,13 +391,6 @@ def catalog() -> dict[str, Query]:
     """
     for mod in _MODULES:
         importlib.import_module(f"{__name__}.{mod}")
-    # every UDF-bearing query module now exists in sys.modules — make
-    # sure each is cloudpickle-registered by value even when the
-    # session was built (and register_udf_modules first ran) before
-    # this import loop (the get_spark-then-catalog flow)
-    from ..session import register_udf_modules
-
-    register_udf_modules(only_loaded=True)
     missing = [n for n in _CONTRACT_ORDER if n not in _REGISTRY]
     if missing:
         raise RuntimeError(f"contract queries missing from registry: {missing}")

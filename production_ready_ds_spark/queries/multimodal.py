@@ -626,8 +626,8 @@ def _synth_dhash_corpus(it):
     one perturbed pixel per variant). RawRGBDecoder is captured from
     module scope, NOT imported here: a worker-side relative import
     needs the package installed on workers, while the module-scope
-    global rides along with the by-value pickle (session.py registers
-    this module)."""
+    global rides along with the by-value pickle (the package registers
+    itself on import)."""
     import numpy as np
     import pandas as pd
 

@@ -377,8 +377,9 @@ def _stream_built_termstore(spark: SparkSession, sf_dir: str):
     q_stream_faceted (a second stream ingest of the identical corpus
     would only double cost; the root is keyed by corpus signature +
     STORE_VERSION so staleness is impossible). A COMPLETE prior build
-    (manifest doc count == corpus count) is re-served; anything else —
-    absent, partial from a crash mid-stream — is wiped and rebuilt.
+    (its ``_SUCCESS`` marker, written once the stream drained) is
+    re-served without a Spark job; anything else — absent, partial
+    from a crash mid-stream — is wiped and rebuilt.
     Attributes match the batch _cached_corpus_index build
     (attrs=(FACET_ATTR,)), so stream-built and batch-built stores are
     structurally identical: same postings, same stats, same facet
@@ -386,33 +387,24 @@ def _stream_built_termstore(spark: SparkSession, sf_dir: str):
     import os
     import shutil
 
-    from ..filecache import derived_dir, read_parquet
-    from ..operators.termstore import DOCS, STORE_VERSION, TermStore
+    from ..filecache import derived_dir
+    from ..operators.termstore import STORE_VERSION, TermStore
     from ..streaming.events import _as_stream_dir
-    from ..tables import load, table_path
+    from ..tables import table_path
     from .llm import FACET_ATTR
 
-    expected = load(spark, sf_dir, "documents").count()
     # the cache key carries the ingest RECIPE (attrs), not just the
     # store layout version: a store built by an older recipe at the
-    # same STORE_VERSION must never be re-served (a doc-count-complete
-    # but attr-less store would fail search_filtered)
+    # same STORE_VERSION must never be re-served (a complete but
+    # attr-less store would fail search_filtered)
     with derived_dir(
         "prds_stream_index",
         (STORE_VERSION, FACET_ATTR),
         table_path(sf_dir, "documents"),
     ) as root:
-        done = TermStore(root)
-        try:
-            segs = done.segments()
-            if segs and done.stats()[0] == expected:
-                sidecar_cols = read_parquet(
-                    spark, done.seg_path(segs[0], DOCS)
-                ).columns
-                if FACET_ATTR in sidecar_cols:  # complete AND current recipe
-                    return done
-        except Exception:
-            pass  # unreadable manifest/sidecar: rebuild below
+        marker = os.path.join(root, "_SUCCESS")
+        if os.path.exists(marker):
+            return TermStore(root)
         shutil.rmtree(root, ignore_errors=True)
         store = TermStore(root)
 
@@ -438,6 +430,7 @@ def _stream_built_termstore(spark: SparkSession, sf_dir: str):
         if not q.awaitTermination(300):
             q.stop()
             raise TimeoutError("stream index ingest did not drain in 300s")
+        open(marker, "w").close()
     return store
 
 

@@ -94,7 +94,8 @@ def substr_candidates(token: Column, max_len: int = MAX_PIECE_LEN) -> Column:
 
 def viterbi_segment(token: str, logp: dict[str, float], max_len: int) -> list[str]:
     """Best segmentation of ``token`` under the unigram model — the
-    worker-side kernel (shipped by value via register_udf_modules).
+    worker-side kernel (shipped by value: the package registers itself
+    for pickle-by-value on import).
     Follows the module determinism contract to the letter."""
     n = len(token)
     if n == 0:

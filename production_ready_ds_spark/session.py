@@ -77,99 +77,13 @@ def get_spark(app_name: str = "production-ready-ds-spark", master: str | None = 
         builder = builder.config(
             "spark.driver.memory", os.environ["SPARK_GRAFT_DRIVER_MEM"]
         )
-    # fast path: register what's imported now; queries/__init__ tops
-    # this up after its module loop, ensure_runtime_confs runs the
-    # full registration on the foreign-session path
-    register_udf_modules(only_loaded=True)
     return builder.getOrCreate()
-
-
-#: Every module that defines worker-side Python (pandas UDFs,
-#: mapInPandas/applyInPandas/UDTF bodies), as dotted paths relative to
-#: the package.
-#: tests/test_udf_registration.py::test_udf_modules_all_registered
-#: greps the source tree for worker-side markers and fails if a module
-#: is missing here — the q_wordpiece_apply incident: its pandas_udf
-#: referenced module globals (wordpiece_segment, the vocab set), the
-#: module wasn't registered, so the closure pickled those BY REFERENCE
-#: and every foreign-cwd worker died on ModuleNotFoundError while
-#: repo-cwd runs (and the test suite) passed silently.
-UDF_MODULES = (
-    "functions.stemmer",
-    "functions.snowball",
-    "functions.unicode_norm",
-    "operators.ann",
-    "operators.ivfstore",
-    "operators.multimodal",
-    "operators.pq",
-    "operators.sketch",
-    "queries.llm",
-    "queries.multimodal",
-    "queries.streaming_queries",
-    "queries.udfs",
-    "queries.unigram",
-    "queries.wordpiece",
-    "sources.api_source",
-    "streaming.dedup",
-    "streaming.events",
-)
-
-
-def register_udf_modules(only_loaded: bool = False) -> None:
-    """Register every module that defines worker-side Python (pandas
-    UDFs, mapInPandas/applyInPandas bodies) for cloudpickle
-    pickle-BY-VALUE. Without this, Spark pickles those functions by
-    module reference and Python workers must be able to import
-    ``production_ready_ds_spark`` — which fails whenever the driver
-    process wasn't started from the repo directory (true for the
-    verification driver, spark-submit from elsewhere, and any real
-    cluster without the package deployed). By-value pickling ships the
-    code inside the serialized task instead. NOTE: registration makes
-    the CLOSURE'S module-global references by-value too — a kernel
-    that instead does ``from ..x import y`` INSIDE its worker body
-    still dies on a foreign cwd (the _synth_wav_grouped incident);
-    capture from module scope.
-
-    ``only_loaded=True`` registers only the modules already in
-    sys.modules — the get_spark() fast path: a session built for
-    operator-level use must not pay the whole query catalog's import
-    (queries.llm alone is ~7k lines, and streaming_queries chain-loads
-    analytics/traindata). Every flow still ends fully registered:
-    queries/__init__ re-invokes this after its module loop (so
-    catalog() users are covered the moment the modules exist), and
-    ensure_runtime_confs — the foreign-session/driver path — runs the
-    FULL registration. Hand-importing a single query submodule
-    (bypassing catalog()) is covered at the @query decorator itself
-    (queries._register_defining_module_by_value — import time IS
-    decoration time), so no flow that can run a query is left
-    by-reference.
-
-    Import errors are deliberately NOT swallowed: a module on this
-    list that cannot import must fail loudly here, not silently fall
-    back to by-reference pickling (the exact incident class the list
-    exists to kill). Only the registration call itself is guarded
-    (already registered / old cloudpickle API)."""
-    import importlib
-    import sys
-
-    from pyspark import cloudpickle
-
-    for name in UDF_MODULES:
-        full = f"{__package__}.{name}"
-        if only_loaded and full not in sys.modules:
-            continue
-        mod = importlib.import_module(full)
-        try:
-            cloudpickle.register_pickle_by_value(mod)
-        except Exception:  # pragma: no cover - already registered / old API
-            pass
 
 
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     """Set the confs this engine relies on even when handed a foreign
     session (e.g. the verification driver's). All of these are
     runtime-settable in Spark 4."""
-    register_udf_modules()
     for key, value in (
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
         ("spark.sql.session.timeZone", "UTC"),

@@ -105,11 +105,4 @@ class PostsApiDataSource(DataSource):
 
 
 def register_posts_api(spark) -> None:
-    # By-value pickling first: the DataSource class ships to Python
-    # workers via cloudpickle, and a driver started outside the repo
-    # (verification harness, spark-submit elsewhere) can't import this
-    # package on the worker side otherwise.
-    from ..session import register_udf_modules
-
-    register_udf_modules()
     spark.dataSource.register(PostsApiDataSource)

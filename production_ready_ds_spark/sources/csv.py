@@ -1,11 +1,11 @@
-"""CSV source/sink matching the reference's conventions.
+"""CSV source matching the reference's conventions.
 
 The reference reads/writes semicolon-delimited UTF-8 CSV with a header
 row and double-quoted fields that may contain EMBEDDED NEWLINES
 (daily/02-19-2018/roh.csv is 134 physical lines for 32 records —
 pandas to_csv quoting, reference 00_training_pipeline.py:34-35). Spark
 needs multiLine + quote-escape options or those records shred; this
-module centralizes the exact option set (SURVEY.md §1.3, S3/S4/S5).
+module centralizes the exact option set (SURVEY.md §1.3, S3/S4).
 """
 
 from __future__ import annotations
@@ -31,12 +31,3 @@ def read_reference_csv(spark: SparkSession, path: str, schema: str | None = None
     if schema:
         reader = reader.schema(schema)
     return reader.csv(path)
-
-
-def write_reference_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """Write a reference-convention CSV directory sink (S5). The
-    reference's single-file toPandas().to_csv variant is its own flagged
-    anti-pattern (01_classification_pipeline.py:200-202); ``single_file``
-    coalesces to 1 task for small exports but stays executor-side."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").options(**REFERENCE_CSV_OPTIONS).csv(path)

@@ -15,7 +15,7 @@ API, from the published Luigi programming model:
   (reference ModelExists, 01_classification_pipeline.py:129-133).
 - :class:`SparkTask` — task whose ``main(spark)`` runs on the shared
   tuned SparkSession (the in-process analogue of the reference's
-  spark-submit bridge O5; per-task conf via ``spark_conf``).
+  spark-submit bridge O5).
 - :func:`build` — the scheduler: DAG walk, completeness pruning,
   deterministic topological execution, cycle/failure handling.
 - :func:`range_daily` — date-range backfill expansion with a

@@ -214,11 +214,7 @@ class ExternalTask(Task):
 class SparkTask(Task):
     """A task whose body runs on the shared SparkSession — the
     in-process analogue of the reference's per-task spark-submit bridge
-    (O5, 00_training_pipeline.py:92-101). Declared resources become
-    runtime confs applied for the duration of the task."""
-
-    #: per-task spark conf overrides, e.g. {"spark.sql.shuffle.partitions": "8"}
-    spark_conf: dict[str, str] = {}
+    (O5, 00_training_pipeline.py:92-101)."""
 
     def spark(self):
         from ..session import get_spark
@@ -229,20 +225,7 @@ class SparkTask(Task):
         raise NotImplementedError
 
     def run(self) -> None:
-        spark = self.spark()
-        previous: dict[str, str | None] = {}
-        for key, value in self.spark_conf.items():
-            try:
-                previous[key] = spark.conf.get(key)
-            except Exception:
-                previous[key] = None
-            spark.conf.set(key, value)
-        try:
-            self.main(spark)
-        finally:
-            for key, value in previous.items():
-                if value is not None:
-                    spark.conf.set(key, value)
+        self.main(self.spark())
 
 
 # ----------------------------------------------------------- scheduler --

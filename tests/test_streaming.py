@@ -290,3 +290,38 @@ def test_stream_classifier_matches_batch_decisions(spark, sf_small):
         for r in cat["q_stream_classifier"].fn(spark, sf_small).collect()
     }
     assert stream == batch
+
+
+def test_stream_index_is_served_behind_its_completion_marker(spark, sf_small):
+    """The stream-built TermStore is re-served only behind the _SUCCESS
+    marker its build writes once the stream drained. Without it (a
+    crash mid-stream) the store is wiped and rebuilt; with it a warm
+    call starts no Spark job (no corpus count to prove completeness)."""
+    import os
+    import uuid
+
+    from production_ready_ds_spark.queries.streaming_queries import (
+        _stream_built_termstore,
+    )
+
+    store = _stream_built_termstore(spark, sf_small)
+    marker = os.path.join(store.root, "_SUCCESS")
+    assert os.path.exists(marker)
+
+    os.remove(marker)
+    leftover = os.path.join(store.root, "leftover-of-a-crashed-build")
+    open(leftover, "w").close()
+    rebuilt = _stream_built_termstore(spark, sf_small)
+    assert rebuilt.root == store.root
+    assert os.path.exists(marker) and not os.path.exists(leftover)
+    assert rebuilt.stats()[0] == load(spark, sf_small, "documents").count()
+
+    sc = spark.sparkContext
+    group = f"stream-index-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "warm stream index")
+    try:
+        warm = _stream_built_termstore(spark, sf_small)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert warm.root == store.root
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -1,94 +1,94 @@
-"""Guard: every module with worker-side Python must be registered for
-cloudpickle pickle-by-value (session.UDF_MODULES). The failure this
-prevents is silent at test time: an unregistered module's UDF closure
-pickles its module-global references BY REFERENCE, so repo-cwd runs
-(the whole test suite) pass while every foreign-cwd worker — the
-verification driver, spark-submit from elsewhere, any real cluster
-without the package deployed — dies on ModuleNotFoundError (the
-q_wordpiece_apply incident)."""
+"""Importing ``production_ready_ds_spark`` registers the whole package
+for cloudpickle pickle-by-value, so code that runs in Python workers
+ships inside the serialized task and workers never import the package.
+The failure this prevents is silent at test time: the suite runs from
+the repo cwd, where a by-reference pickle still imports, while every
+foreign-cwd worker (spark-submit from elsewhere, a cluster without the
+package deployed) dies on ``ModuleNotFoundError``. Each test therefore
+runs its driver in a subprocess from another cwd with PYTHONPATH unset
+and the package only on ``sys.path``."""
 
 from __future__ import annotations
 
-import re
+import os
+import subprocess
+import sys
 from pathlib import Path
 
 import production_ready_ds_spark
-from production_ready_ds_spark.session import UDF_MODULES
 
-# Call-site markers only — module docstrings and comments mention these
-# names freely. applyInPandasWithState is covered by .applyInPandas(;
-# bare udf(/`@udf`, the Arrow map/apply variants, and the rdd lambda
-# APIs are included so a future module using any worker-side style
-# cannot slip the guard.
-_MARKERS = re.compile(
-    r"\bpandas_udf\s*\(|\.mapInPandas\s*\(|\.applyInPandas|"
-    r"\.mapInArrow\s*\(|\.applyInArrow|"
-    r"\budf\s*\(|@udf\b|\budtf\s*\(|"
-    # rdd TRANSFORMATIONS ship Python lambdas to workers; bare .rdd
-    # metadata access (getNumPartitions) does not
-    r"\.rdd\.(?:map|flatMap|filter|foreach|mapPartitions)|"
-    r"\bmapPartitions\s*\(|\.foreachPartition\s*\("
-)
+REPO = str(Path(production_ready_ds_spark.__file__).parent.parent)
 
 
-def _strip_comments_and_docstrings(src: str) -> str:
-    # cheap but sufficient: drop full-line comments and string literals
-    # that span lines (docstrings); call sites survive untouched
-    src = re.sub(r"(?m)^\s*#.*$", "", src)
-    src = re.sub(r'"""[\s\S]*?"""', "", src)
-    src = re.sub(r"'''[\s\S]*?'''", "", src)
-    return src
-
-
-def test_udf_modules_all_registered():
-    pkg_root = Path(production_ready_ds_spark.__file__).parent
-    offenders = []
-    for py in sorted(pkg_root.rglob("*.py")):
-        rel = py.relative_to(pkg_root).with_suffix("")
-        dotted = ".".join(rel.parts)
-        if dotted in ("session",):  # the registry itself
-            continue
-        body = _strip_comments_and_docstrings(py.read_text())
-        if _MARKERS.search(body) and dotted not in UDF_MODULES:
-            offenders.append(dotted)
-    assert not offenders, (
-        f"modules with worker-side Python missing from session.UDF_MODULES: "
-        f"{offenders} — add them or their UDFs break on foreign-cwd workers"
-    )
-
-
-def test_registered_modules_import():
-    import importlib
-
-    for name in UDF_MODULES:
-        importlib.import_module(f"production_ready_ds_spark.{name}")
-
-
-def test_hand_imported_query_submodule_registers_by_value():
-    """Round-8 verdict item 6: importing ONE query submodule directly
-    (no catalog(), no get_spark, no ensure_runtime_confs) must leave
-    that module cloudpickle-registered by value — the @query decorator
-    is the hook, so decoration time is import time. Subprocess: this
-    test process has long since imported everything."""
-    import subprocess
-    import sys
-    from pathlib import Path
-
-    repo = str(Path(production_ready_ds_spark.__file__).parent.parent)
-    code = (
-        "import sys; sys.path.insert(0, %r)\n"
-        "import production_ready_ds_spark.queries.udfs as m\n"
-        "from pyspark import cloudpickle\n"
-        "reg = cloudpickle.list_registry_pickle_by_value()\n"
-        "assert m.__name__ in {getattr(x, '__name__', x) for x in reg}\n"
-        "print('BYVALUE-OK')\n" % repo
-    )
-    out = subprocess.run(
+def _run(code: str, *, timeout: int = 120) -> subprocess.CompletedProcess:
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    return subprocess.run(
         [sys.executable, "-c", code],
         capture_output=True,
         text=True,
         cwd="/tmp",
-        timeout=120,
+        env=env,
+        timeout=timeout,
+    )
+
+
+def test_pickled_kernel_loads_where_the_package_does_not_import(tmp_path):
+    """A kernel pickled by a process that imported ONE leaf module loads
+    and runs in a process that cannot import the package at all."""
+    blob = tmp_path / "stem.pkl"
+    dump = _run(
+        "import sys; sys.path.insert(0, %r)\n"
+        "from production_ready_ds_spark.functions.snowball import snowball_stem\n"
+        "from pyspark import cloudpickle\n"
+        "open(%r, 'wb').write(cloudpickle.dumps(snowball_stem))\n" % (REPO, str(blob))
+    )
+    assert dump.returncode == 0, dump.stderr[-2000:]
+    load = _run(
+        "import importlib.util, pickle, sys\n"
+        "assert importlib.util.find_spec('production_ready_ds_spark') is None\n"
+        "stem = pickle.load(open(%r, 'rb'))\n"
+        "print('STEM', stem('running'), stem('generously'))\n" % str(blob)
+    )
+    assert load.returncode == 0, load.stderr[-2000:]
+    assert "STEM run generous" in load.stdout
+
+
+def test_foreign_cwd_workflow_runs_udf_imported_after_the_session(sf_small):
+    """get_spark() first, the pipeline module (and with it the stemmer
+    UDF) imported afterwards, then CleanDaily on sf0.001: its pandas UDF
+    runs in Python workers that cannot import the package."""
+    code = (
+        "import sys, tempfile, datetime as dt; sys.path.insert(0, %r)\n"
+        "from production_ready_ds_spark.session import get_spark\n"
+        "spark = get_spark('foreign-cwd', master='local[2]')\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "from production_ready_ds_spark.pipelines.classification import CleanDaily\n"
+        "from production_ready_ds_spark.workflow import build\n"
+        "task = CleanDaily(date=dt.date(2024, 1, 5), data_root=tempfile.mkdtemp(),\n"
+        "                  sf_dir=%r)\n"
+        "res = build([task])\n"
+        "n = spark.read.parquet(task.output().path).count()\n"
+        "print('RAN', len(res['ran']), 'ROWS', n)\n"
+        "spark.stop()\n" % (REPO, sf_small)
+    )
+    out = _run(code, timeout=300)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "RAN 2 ROWS" in out.stdout, out.stdout
+    assert int(out.stdout.split("ROWS")[1].split()[0]) > 0
+
+
+def test_hand_imported_query_submodule_registers_by_value():
+    """Importing ONE query submodule directly (no catalog(), no
+    get_spark, no ensure_runtime_confs) registers the package by value,
+    which covers that submodule: cloudpickle checks every parent package
+    name (the round trip above shows it for a leaf module)."""
+    out = _run(
+        "import sys; sys.path.insert(0, %r)\n"
+        "import production_ready_ds_spark.queries.udfs\n"
+        "from pyspark import cloudpickle\n"
+        "reg = cloudpickle.list_registry_pickle_by_value()\n"
+        "assert reg == {'production_ready_ds_spark'}, reg\n"
+        "print('BYVALUE-OK')\n" % REPO
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "BYVALUE-OK" in out.stdout

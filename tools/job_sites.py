@@ -7,9 +7,11 @@ take, first, count, head), the schema-inferring reader
 (``DataFrameReader.parquet``) and Spark ML model loading
 (``MLReadable.load``) to stamp the job description with the first
 production_ready_ds_spark stack frame before the call fires, then runs
-the query with the noop sink and reports every job with its site. A
-read of unchanged files through ``filecache.read_parquet`` launches no
-job, so a ``parquet@...`` site names a read that infers its schema.
+the query with the noop sink and reports every job with its site, its
+stages (name, ms, tasks), and per query the summed job time and the
+driver gap (wall minus summed job time: planning and driver-side work).
+A read of unchanged files through ``filecache.read_parquet`` launches
+no job, so a ``parquet@...`` site names a read that infers its schema.
 
     python tools/job_sites.py q_curation_ingest
 """
@@ -54,7 +56,7 @@ def main() -> int:
     # shadowed by classic's own method definitions
     from pyspark.sql.readwriter import DataFrameReader
 
-    from production_ready_ds_spark.session import configure, register_udf_modules
+    from production_ready_ds_spark.session import configure
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
@@ -64,7 +66,6 @@ def main() -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    register_udf_modules()
 
     def stamped(label, orig):
         def wrapped(*a, **kw):
@@ -100,29 +101,52 @@ def main() -> int:
             sc.setJobDescription(None)
             wall = time.perf_counter() - t0
         # last run reported: the jobs numbered from its start on
-        data = json.load(
-            urllib.request.urlopen("http://localhost:4052/api/v1/applications")
-        )
-        app_id = data[0]["id"]
-        jobs = json.load(
-            urllib.request.urlopen(
-                f"http://localhost:4052/api/v1/applications/{app_id}/jobs?status=succeeded"
-            )
-        )
+        base = f"http://localhost:4052/api/v1/applications/{sc.applicationId}"
+        jobs = _get(f"{base}/jobs?status=succeeded")
+        stages = {s["stageId"]: s for s in _get(f"{base}/stages?details=false")}
         rows = [
             {
                 "jobId": j["jobId"],
                 "desc": (j.get("description") or "")[:90],
                 "ms": _dur_ms(j),
                 "tasks": j.get("numTasks"),
+                "stages": [
+                    {
+                        "stageId": sid,
+                        "name": stages[sid]["name"].split("\n")[0][:80],
+                        "status": stages[sid]["status"],
+                        "ms": _dur_ms(stages[sid]),
+                        "tasks": stages[sid].get("numTasks"),
+                    }
+                    for sid in sorted(j.get("stageIds", []))
+                    if sid in stages
+                ],
             }
             for j in sorted(jobs, key=lambda j: j["jobId"])
             if j["jobId"] >= before
         ]
-        report[name] = {"wall_last_run_s": round(wall, 3), "jobs": rows}
-        print(f"== {name}: last-run wall {wall:.3f}s, {len(rows)} jobs")
+        sum_job_ms = sum(max(row["ms"], 0) for row in rows)
+        gap_ms = int(wall * 1000) - sum_job_ms
+        report[name] = {
+            "wall_last_run_s": round(wall, 3),
+            "sum_job_ms": sum_job_ms,
+            "driver_gap_ms": gap_ms,
+            "jobs": rows,
+        }
+        print(
+            f"== {name}: last-run wall {wall:.3f}s, {len(rows)} jobs, "
+            f"sum(job) {sum_job_ms} ms, driver gap {gap_ms} ms"
+        )
         for row in rows:
-            print(f"   {row['jobId']:>5} {row['ms']:>7} ms  {row['desc']}")
+            print(
+                f"   {row['jobId']:>5} {row['ms']:>7} ms  stages={len(row['stages'])} "
+                f"tasks={row['tasks']:>4}  {row['desc']}"
+            )
+            for st in row["stages"]:
+                print(
+                    f"         stage {st['stageId']:>5} {st['ms']:>7} ms  tasks={st['tasks']:>4}  "
+                    f"{st['status']:<9} {st['name']}"
+                )
     with open("/tmp/job_sites.json", "w") as f:
         json.dump(report, f, indent=1)
     print("written: /tmp/job_sites.json")
@@ -130,14 +154,20 @@ def main() -> int:
     return 0
 
 
-def _dur_ms(j) -> int:
+def _get(url: str):
+    with urllib.request.urlopen(url) as r:
+        return json.load(r)
+
+
+def _dur_ms(item) -> int:
+    """Submission-to-completion ms of a REST job or stage; -1 when unset."""
     from datetime import datetime
 
     try:
-        a = datetime.strptime(j["submissionTime"].replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f")
-        b = datetime.strptime(j["completionTime"].replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f")
+        a = datetime.strptime(item["submissionTime"].replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f")
+        b = datetime.strptime(item["completionTime"].replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f")
         return int((b - a).total_seconds() * 1000)
-    except Exception:
+    except (KeyError, ValueError):
         return -1
 
 
