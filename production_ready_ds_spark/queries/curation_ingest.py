@@ -41,7 +41,9 @@ Every decision is deterministic and SQL-replayable (the md5 hash, the
 md5+affine MinHash family, the closed-form dHash synth at raw tier,
 the sign-bucket blocking), so the WHOLE composed chain — gates,
 survivor sets, family labels, and the keep-best winners — sits under
-the driver hash gate.
+the driver hash gate. The oracle embeds the stage texts verbatim and
+declares the three stage pair sets as MATERIALIZED CTEs, so DuckDB
+evaluates each once however often the chain reads it.
 
 Incremental ≡ one-shot: the id-range-batched DAG reproduces exactly
 this query's survivor sets and canonical view
@@ -99,12 +101,15 @@ _CURATION_INGEST_SQL = f"""
       FROM documents d
       JOIN exk ON md5(d.text) = exk.h AND d.doc_id > exk.keep_id
     ),
-    mh_pairs AS (SELECT doc_a, doc_b FROM ({_MH_SQL_S1})),
+    -- MATERIALIZED: DuckDB 1.0 inlines a plain CTE at every reference,
+    -- and each pair set is read 3-4 times below (alledges twice more in
+    -- cedges); inlined, the stage fragments re-run and exhaust memory.
+    mh_pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM ({_MH_SQL_S1})),
     s2 AS (
       SELECT * FROM s1
       WHERE doc_id NOT IN (SELECT doc_b FROM mh_pairs)
     ),
-    ph_pairs AS (SELECT doc_a, doc_b FROM ({_PH_SQL_S2})),
+    ph_pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM ({_PH_SQL_S2})),
     s3 AS (
       SELECT * FROM s2
       WHERE doc_id NOT IN (SELECT doc_b FROM ph_pairs)
@@ -115,7 +120,7 @@ _CURATION_INGEST_SQL = f"""
              CAST(e.embedding AS DOUBLE[]) AS de
       FROM embeddings e JOIN s3 ON s3.doc_id = e.vec_id, planes
     ),
-    sem_pairs AS (
+    sem_pairs AS MATERIALIZED (
       SELECT a.vec_id AS doc_a, c.vec_id AS doc_b
       FROM semb a JOIN semb c
         ON a.bucket = c.bucket AND a.vec_id < c.vec_id

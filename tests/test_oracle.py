@@ -19,6 +19,31 @@ def test_query_matches_oracle(spark, sf_small, name):
     assert res.ok, f"{name}: {res.detail} (spark_rows={res.spark_rows}, oracle_rows={res.oracle_rows})"
 
 
+def test_curation_oracles_run_in_bounded_memory(sf_small):
+    """The composed curation oracles must fit a small DuckDB memory cap.
+
+    Their stage pair sets (MinHash, dHash, cosine) are each read three
+    or four times downstream; DuckDB 1.0 inlines a plain CTE at every
+    reference, so the heavy fragments were planned over and over and
+    the oracle ran out of memory (12.5 GiB at sf0.001). Materialized
+    pair sets keep the whole oracle well under 1 GB. DuckDB only — no
+    Spark — so a regression fails here in seconds.
+    """
+    from production_ready_ds_spark.oracle import duck_connection
+
+    con = duck_connection(sf_small)
+    try:
+        con.execute("SET memory_limit='1GB'")
+        n_docs = con.execute("SELECT count(*) FROM documents").fetchone()[0]
+        ingest = con.execute(catalog()["q_curation_ingest"].sql).fetchall()
+        report = con.execute(catalog()["q_curation_report"].sql).fetchall()
+    finally:
+        con.close()
+    assert n_docs == 500
+    assert len(ingest) == n_docs
+    assert report
+
+
 def test_no_hugeint_reaches_oracle_output(sf_small):
     """Catalog-wide dtype sweep: no oracle SQL may emit a HUGEINT column.
 
